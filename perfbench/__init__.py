@@ -1,0 +1,1 @@
+"""rlv benchmark package: see run.py and README.md."""
