@@ -94,13 +94,35 @@ class SymbolTable:
         if len(symbols) > MAX_SYMBOLS:
             raise ValueError("too many symbols")
         self.symbols = list(symbols)
-        self.by_prefix: dict[int, list[tuple[bytes, int]]] = {}
-        for code, sym in enumerate(self.symbols):
+        for sym in self.symbols:
             if not 1 <= len(sym) <= MAX_SYMBOL_LEN:
                 raise ValueError("symbol length out of range")
+        # flattened symbol payload + offsets for the vectorized decode gather
+        self._sym_lens = np.array(
+            [len(s) for s in self.symbols], dtype=np.int64
+        )
+        self._sym_offs = np.zeros(len(self.symbols) + 1, dtype=np.int64)
+        np.cumsum(self._sym_lens, out=self._sym_offs[1:])
+        self._sym_payload = np.frombuffer(
+            b"".join(self.symbols), dtype=np.uint8
+        ) if self.symbols else np.empty(0, np.uint8)
+        # the longest-match tables only encode needs: built on first use,
+        # so a decode-only table (one per dictionary block on the query
+        # path) skips them
+        self._by_prefix: dict[int, list[tuple[bytes, int]]] | None = None
+
+    @property
+    def by_prefix(self) -> dict[int, list[tuple[bytes, int]]]:
+        if self._by_prefix is None:
+            self._build_encode_tables()
+        return self._by_prefix
+
+    def _build_encode_tables(self) -> None:
+        by_prefix: dict[int, list[tuple[bytes, int]]] = {}
+        for code, sym in enumerate(self.symbols):
             # longest-first candidate list per leading byte
-            self.by_prefix.setdefault(sym[0], []).append((sym, code))
-        for cands in self.by_prefix.values():
+            by_prefix.setdefault(sym[0], []).append((sym, code))
+        for cands in by_prefix.values():
             cands.sort(key=lambda t: -len(t[0]))
         # Laminar interval table for the vectorized longest-match: symbol s of
         # length L matches position i iff the big-endian 8-byte key at i lies
@@ -135,15 +157,7 @@ class SymbolTable:
                 if p is not None:
                     self._ent_parent[i] = p
                     break
-        # flattened symbol payload + offsets for the vectorized decode gather
-        self._sym_lens = np.array(
-            [len(s) for s in self.symbols], dtype=np.int64
-        )
-        self._sym_offs = np.zeros(len(self.symbols) + 1, dtype=np.int64)
-        np.cumsum(self._sym_lens, out=self._sym_offs[1:])
-        self._sym_payload = np.frombuffer(
-            b"".join(self.symbols), dtype=np.uint8
-        ) if self.symbols else np.empty(0, np.uint8)
+        self._by_prefix = by_prefix
 
     _ORBIT_BLOCK = 256
 
@@ -151,6 +165,8 @@ class SymbolTable:
         n = len(data)
         if n == 0:
             return b""
+        if self._by_prefix is None:
+            self._build_encode_tables()
         arr = np.frombuffer(bytes(data), dtype=np.uint8)
         # rolling big-endian key: K[i] = uint64 of data[i:i+8], zero-padded
         ext = np.zeros(n + 7, dtype=np.uint64)

@@ -929,6 +929,73 @@ def _write_grouped(tmp: str, tbl, compression: str | None = "zstd") -> None:
             w.write_table(run)
 
 
+def _read_filtered(path: str, columns: list[str] | None = None, *,
+                   col: str | list[str] | None = None,
+                   seg: str | None = None,
+                   block_idx=None):
+    """Rows of one blocks or sidecar file whose ``col_name`` is ``col``
+    (one name or a list), whose ``split_seq`` is ``seg`` and whose
+    ``block_idx`` is in ``block_idx`` (None = no condition on that
+    column), projected to ``columns`` (None = all; names the file lacks
+    are skipped, so a pre-r4 file simply has no ``split_seq``).
+
+    The ONE reader of the query path.  Row groups are picked from the
+    footer's ``col_name`` / ``split_seq`` statistics — the writers lay out
+    one row group per (split_seq, col_name) run, so a column-scoped read
+    decompresses only that column's chunks — and read single-threaded;
+    a row group without statistics is read.  Rows are then filtered in
+    Arrow, so the result is exact either way.  An unreadable file raises
+    naming it, as ``pq.read_table`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    try:
+        pf = pq.ParquetFile(path)
+    except FileNotFoundError:
+        raise FileNotFoundError(path) from None
+    except pa.ArrowInvalid as e:
+        raise pa.ArrowInvalid(
+            f"Could not open Parquet input source '{path}': {e}"
+        ) from None
+    names = pf.schema_arrow.names
+    conds: dict[str, set] = {}
+    if col is not None:
+        conds["col_name"] = {col} if isinstance(col, str) else set(col)
+    if seg is not None:
+        conds["split_seq"] = {seg}
+    if block_idx is not None:
+        conds["block_idx"] = {int(b) for b in block_idx}
+    meta = pf.metadata
+    rgs = []
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        keep = True
+        for name in ("col_name", "split_seq"):
+            if name not in conds or name not in names:
+                continue
+            st = rg.column(names.index(name)).statistics
+            if st is not None and st.has_min_max and not any(
+                st.min <= v <= st.max for v in conds[name]
+            ):
+                keep = False
+                break
+        if keep:
+            rgs.append(i)
+    want = names if columns is None else [c for c in columns if c in names]
+    read = list(dict.fromkeys([*want, *conds]))
+    tbl = pf.read_row_groups(rgs, columns=read, use_threads=False)
+    mask = None
+    for name, vals in conds.items():
+        m = pc.is_in(tbl.column(name),
+                     value_set=pa.array(sorted(vals),
+                                        tbl.schema.field(name).type))
+        mask = m if mask is None else pc.and_(mask, m)
+    if mask is not None:
+        tbl = tbl.filter(mask)
+    return tbl.select(want).combine_chunks()
+
+
 def _read_dict_sidecar(
     blocks_path: str, default_seq: str,
     col: str | list[str] | None = None,
@@ -948,27 +1015,14 @@ def _read_dict_sidecar(
     compacted file to its own split's dictionaries (merged sidecars carry
     the ``split_seq`` column and one row group per segment, so the filter
     prunes the read exactly)."""
-    import pyarrow.parquet as pq
-
     spath = os.path.join(
         os.path.dirname(os.path.dirname(blocks_path)),
         "strings",
         os.path.basename(blocks_path),
     )
-    filters = []
-    if col is not None:
-        cols = [col] if isinstance(col, str) else list(col)
-        filters.append(("col_name", "in", cols))
-    if block_idx is not None:
-        filters.append(("block_idx", "in", list(block_idx)))
-    if seg is not None:
-        filters.append(("split_seq", "=", seg))
     side: dict[tuple[str, str, int], bytes] = {}
     if os.path.exists(spath):
-        stbl = pq.read_table(
-            spath,
-            filters=filters or None,
-        ).combine_chunks()
+        stbl = _read_filtered(spath, col=col, seg=seg, block_idx=block_idx)
         seqs = (
             stbl.column("split_seq").to_pylist()
             if "split_seq" in stbl.column_names
@@ -1104,11 +1158,7 @@ def _make_table_verify_worker(blocks_dir: str, schema: dict,
     arbitrary tables.  ``mismatches`` counts rows where ANY column differs."""
     from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(symbols_hex)
     order_col = schema["order_col"]
     read_cols = list(dict.fromkeys(
         [order_col, *schema["int_cols"], *schema["str_cols"]]
@@ -1125,13 +1175,7 @@ def _make_table_verify_worker(blocks_dir: str, schema: dict,
                 seg_scope = _task_seg(row)
                 pmap = _pieces_map(split_id, str(row["pieces"]))
                 bpath = os.path.join(blocks_dir, f"{split_id}.parquet")
-                btbl = pq.read_table(
-                    bpath,
-                    filters=(
-                        [("split_seq", "=", seg_scope)]
-                        if seg_scope is not None else None
-                    ),
-                ).combine_chunks()
+                btbl = _read_filtered(bpath, seg=seg_scope)
                 side = _read_dict_sidecar(bpath, split_id, seg=seg_scope)
                 n_total = 0
                 mismatches = 0
@@ -1260,11 +1304,9 @@ def verify_table_files(spark: SparkSession, enc_dir: str) -> dict:
     if not todo:
         return {"splits": 0, "rows": 0, "mismatches": 0}
     syms = engine_files._load_symbols(enc_dir)
-    tasks_df = spark.createDataFrame(
-        [(t["split_id"], t["pieces"], t["segment"]) for t in todo],
-        "split_id string, pieces string, segment string",
-    ).repartition(len(todo))
-    results = tasks_df.mapInPandas(
+    results = _dispatch(
+        spark,
+        pd.DataFrame(todo, columns=["split_id", "pieces", "segment"]),
         _make_table_verify_worker(
             f"{enc_dir}/blocks",
             schema,
@@ -1295,11 +1337,7 @@ def _make_table_decode_worker(out_dir: str, schema: dict,
                               symbols_hex: tuple[str, ...] | None):
     from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(symbols_hex)
 
     def run_decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
@@ -1309,15 +1347,9 @@ def _make_table_decode_worker(out_dir: str, schema: dict,
         for pdf in pdf_iter:
             for _, row in pdf.iterrows():
                 path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
+                file_sid = _file_sid(path)
                 seg_scope = _task_seg(row)
-                tbl = pq.read_table(
-                    path,
-                    filters=(
-                        [("split_seq", "=", seg_scope)]
-                        if seg_scope is not None else None
-                    ),
-                ).combine_chunks()
+                tbl = _read_filtered(path, seg=seg_scope)
                 side = _read_dict_sidecar(path, file_sid, seg=seg_scope)
                 seg_cols = [
                     _decode_split_columns(seg, side, schema, symbols, seq)
@@ -1393,7 +1425,8 @@ def decode_table_files(
         return {"files": 0, "rows": 0}
     os.makedirs(out_dir, exist_ok=True)
     syms = engine_files._load_symbols(enc_dir)
-    rows = _spark_tasks(spark, tasks).mapInPandas(
+    rows = _dispatch(
+        spark, tasks,
         _make_table_decode_worker(
             out_dir,
             schema,
@@ -1475,13 +1508,157 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
     )
 
 
-def _spark_tasks(spark: SparkSession, tasks: pd.DataFrame):
-    """Spark task DataFrame from a :func:`_query_tasks` frame, one
-    partition per task."""
-    return spark.createDataFrame(
-        [(f, s) for f, s in zip(tasks["file"], tasks["segment"])],
-        "file string, segment string",
-    ).repartition(len(tasks))
+# Largest decode bill (values phase 2 decodes, summed over the fetched
+# blocks and columns) the driver runs itself instead of dispatching Python
+# tasks: 512 Ki values is ~60 ms at the measured ~118 ns/value block decode
+# (perfbench's blocks.decode_ns_per_value), against a 0.3-0.7 s floor for
+# dispatching even 4 Python tasks.  A constant of the engine, not a knob.
+DRIVER_BILL_VALUES = 512 * 1024
+
+
+def _file_sid(path: str) -> str:
+    return os.path.splitext(os.path.basename(path))[0]
+
+
+def _symbol_list(symbols_hex: tuple[str, ...] | None):
+    return (
+        [bytes.fromhex(h) for h in symbols_hex]
+        if symbols_hex is not None
+        else None
+    )
+
+
+class _TaskOp:
+    """One query operator's per-(file, segment) task, split where the
+    dispatcher prices it: ``phase1(path, file_sid, seg)`` reads metadata
+    and sidecars only and returns a picklable plan, ``bill(plan)`` is the
+    number of values phase 2 decodes, and ``finish(path, file_sid, seg,
+    plan)`` fetches, decodes and reduces to one partial frame.
+
+    Calling the op over task frames is the ``mapInPandas`` worker: it
+    uses the plan the driver shipped in a ``phase1`` column when there is
+    one, so a file's metadata is read once per query, and runs phase 1
+    itself otherwise."""
+
+    def __init__(self, finish, phase1, bill=None):
+        self.finish = finish
+        self.phase1 = phase1
+        self.bill = bill if bill is not None else _no_bill
+
+    def __call__(self, pdf_iter: Iterator[pd.DataFrame]
+                 ) -> Iterator[pd.DataFrame]:
+        import pickle
+
+        from rlv.util import tune_malloc
+
+        tune_malloc()
+        for pdf in pdf_iter:
+            for row in pdf.to_dict("records"):
+                path = row["file"]
+                sid, seg = _file_sid(path), _task_seg(row)
+                shipped = row.get("phase1")
+                plan = (
+                    pickle.loads(shipped) if shipped is not None
+                    else self.phase1(path, sid, seg)
+                )
+                yield self.finish(path, sid, seg, plan)
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str):
+    """DataFrame over rows the driver holds, built from pandas so Spark
+    plans a LocalRelation: collecting it, or a projection of it, starts no
+    Spark job (a Python tuple list plans as a Python-RDD scan instead)."""
+    return spark.createDataFrame(pdf, schema)
+
+
+def _dispatch(spark: SparkSession, tasks: pd.DataFrame, op, schema: str,
+              combine=None, fold=None):
+    """Run ``op`` (a :class:`_TaskOp`, or a plain ``mapInPandas`` worker)
+    over a task frame and return its result: ``fold(partials)`` when the
+    operator folds in Python (a list of ``schema``-shaped pandas frames;
+    used for partials bounded by the task count), else ``combine`` over
+    the partials as a DataFrame (None = the partials themselves).
+
+    With at most ``defaultParallelism`` tasks the driver runs phase 1 of
+    every task and prices the decode bill.  A bill of at most
+    :data:`DRIVER_BILL_VALUES` runs phases 2-3 in the driver too and no
+    Python task is dispatched; unfolded partials become a LocalRelation.
+    A larger bill ships each task's phase-1 plan in its task row, so
+    workers do not read metadata again.  The task frame is built from
+    pandas either way; with more tasks than cores it is repartitioned to
+    one task per partition, as before."""
+    import pickle
+
+    n = len(tasks)
+    cores = spark.sparkContext.defaultParallelism
+    parts: list[pd.DataFrame] | None = [] if n == 0 else None
+    if n and getattr(op, "phase1", None) is not None and n <= cores:
+        args = [
+            (r["file"], _file_sid(r["file"]), _task_seg(r))
+            for r in tasks.to_dict("records")
+        ]
+        plans = [op.phase1(*a) for a in args]
+        if sum(op.bill(p) for p in plans) <= DRIVER_BILL_VALUES:
+            parts = [op.finish(*a, p) for a, p in zip(args, plans)]
+        else:
+            tasks = tasks.assign(phase1=[pickle.dumps(p) for p in plans])
+    if parts is None:
+        frame = spark.createDataFrame(
+            tasks,
+            ", ".join(
+                f"`{c}` {'binary' if c == 'phase1' else 'string'}"
+                for c in tasks.columns
+            ),
+        )
+        if n > cores:
+            frame = frame.repartition(n)
+        out = frame.mapInPandas(op, schema)
+        if fold is None:
+            return combine(out) if combine is not None else out
+        # object columns keep Python ints (a nullable bigint would
+        # become float64 in pandas) and Decimals exact
+        parts = [pd.DataFrame([tuple(r) for r in out.collect()],
+                              columns=out.columns, dtype=object)]
+    if fold is not None:
+        return fold(parts)
+    local = (
+        _local_frame(spark, pd.concat(parts, ignore_index=True), schema)
+        if parts else spark.createDataFrame([], schema)
+    )
+    return combine(local) if combine is not None else local
+
+
+def _need_bill(info: dict, need: dict[str, set[int]]) -> int:
+    """Values phase 2 decodes for a ``need`` fetch plan: the ``n_values``
+    of every fetched (column, block) — any column of ``info`` gives the
+    row counts, which phase 1 checked agree across columns."""
+    rows = next(iter(info.values()), {})
+    return sum(
+        rows[key][0]
+        for idxs in need.values() if idxs
+        for key in rows if key[1] in idxs
+    )
+
+
+def _no_bill(plan) -> int:
+    """Bill of an op whose phase 2 decodes no block (metadata and
+    sidecars only)."""
+    return 0
+
+
+def _planned_frame(path, file_sid, seg, plan) -> pd.DataFrame:
+    """``finish`` of a metadata-only op: its phase 1 built the partial."""
+    return plan
+
+
+def _summed(parts: list[pd.DataFrame], col: str) -> int:
+    return sum(int(p[col].sum()) for p in parts)
+
+
+def _plan_bill(plan) -> int:
+    """Bill of a classifying op's plan ``(info, ..., need)``; None is a
+    task whose every block pruned."""
+    return 0 if plan is None else _need_bill(plan[0], plan[-1])
 
 
 def _typed_field_type(schema: dict, c: str) -> str:
@@ -1724,17 +1901,13 @@ def zonemap_stats(enc_dir: str, col: str, lo: int, hi: int) -> dict:
     """Driver-side pruning estimate from block METADATA only (a column-
     pruned read of the blocks files — no block payload is touched):
     {blocks_total, blocks_matching, rows_total, rows_in_matching}."""
-    import pyarrow.parquet as pq
-
     schema = _require_int_col(enc_dir, col)
     lo = _plane_literal(schema, col, lo, "lo")
     hi = _plane_literal(schema, col, hi, "hi")
     total = match = rows = rows_m = 0
     for path in _live_block_files(enc_dir):
-        t = pq.read_table(
-            path,
-            columns=["col_name", "n_values", "n_runs", "min_val", "max_val"],
-            filters=[("col_name", "=", col)],
+        t = _read_filtered(
+            path, ["n_values", "n_runs", "min_val", "max_val"], col=col,
         )
         nv = t.column("n_values").to_numpy()
         nr = t.column("n_runs").to_numpy()
@@ -1787,14 +1960,8 @@ def _make_scan_worker(schema: dict, preds: list[dict],
     selective predicate; row masks AND together.  A single-literal member
     pred whose column is projected keeps the equality fast path: kept rows
     ARE the literal, no second decode, no dictionary gather."""
-    from rlv.util import tune_malloc
-
     str_cols = set(schema["str_cols"])
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(symbols_hex)
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     mem_cols = [p["col"] for p in mem_preds]
     # first member pred per column: its phase-1 dictionaries serve the
@@ -1823,531 +1990,539 @@ def _make_scan_worker(schema: dict, preds: list[dict],
             }
         )
 
-    def run_scan(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    meta_pred_cols = sorted(
+        {p["col"] for p in int_preds}
+        | {atom["col"] for node in or_nodes for leaf in node
+           for atom in _leaf_atoms(leaf)
+           if atom["kind"] in ("range", "valid")}
+    )
+    all_mem_cols = sorted(
+        set(mem_cols)
+        | {atom["col"] for node in or_nodes for leaf in node
+           for atom in _leaf_atoms(leaf)
+           if atom["kind"] == "member"}
+    )
+
+    def phase1(path, file_sid, seg):
+        from rlv import blocks as B
+
+        # phase 1 — METADATA only (no payload column): ONE
+        # payload-free read covers every metadata-predicate column
+        # (top-level + OR leaves) and classification runs in
+        # Python — exact, incl. IN-list literal membership (a
+        # parquet [min, max] envelope filter would keep blocks no
+        # literal falls inside); ONE sidecar read covers every
+        # membership column, each dictionary decoded once however
+        # many preds reference it.  The file's surviving ordinals
+        # are the INTERSECTION across preds; pruned blocks never
+        # materialize payload.
+        # metadata covers the membership columns too: their
+        # (n_values, n_nulls) let a member pred whose whole
+        # dictionary matches a no-NULL block classify FULL, which
+        # the payload planner below exploits
+        meta_read_cols = sorted(
+            set(meta_pred_cols) | set(all_mem_cols)
+        )
+        col_info: dict[str, dict[tuple[str, int], tuple]] = {
+            c: {} for c in meta_read_cols
+        }
+        if meta_read_cols:
+            meta = _read_filtered(
+                path,
+                ["split_seq", "col_name", "block_idx", "n_values",
+                 "n_nulls", "n_runs", "min_val", "max_val"],
+                col=meta_read_cols, seg=seg,
+            )
+            for sid, mseg in _split_segments(meta, file_sid):
+                for name, bi, nv, nn, nr, mn, mx in zip(
+                    mseg.column("col_name").to_pylist(),
+                    mseg.column("block_idx").to_numpy(),
+                    mseg.column("n_values").to_numpy(),
+                    mseg.column("n_nulls").to_numpy(),
+                    mseg.column("n_runs").to_numpy(),
+                    mseg.column("min_val").to_numpy(),
+                    mseg.column("max_val").to_numpy(),
+                ):
+                    col_info[name][(sid, int(bi))] = (
+                        int(nv), int(nn), int(nr), int(mn),
+                        int(mx),
+                    )
+
+        def _int_phase1(p, col_info=col_info) -> set[int]:
+            return {
+                bi for _, bi
+                in _int_leaf_class_map(p, col_info[p["col"]])
+            }
+
+        # sidecar read is LAZY: when the int-predicate
+        # intersection already pruned the whole file (the common
+        # case on a zone-map-clustered range), no dictionary byte
+        # is ever read
+        side_state: dict = {}
+        dict_cache: dict[tuple[str, str, int], object] = {}
+
+        def _mem_phase1(p, path=path, file_sid=file_sid, seg=seg,
+                        side_state=side_state,
+                        dict_cache=dict_cache):
+            if "side" not in side_state:
+                side_state["side"] = _read_dict_sidecar(
+                    path, file_sid, col=all_mem_cols, seg=seg,
+                )
+            codes: dict[tuple[str, int], np.ndarray] = {}
+            dicts: dict[tuple[str, int], object] = {}
+            for (sid, name, bi), blob in side_state["side"].items():
+                if name != p["col"]:
+                    continue
+                uniq = dict_cache.get((sid, name, bi))
+                if uniq is None:
+                    uniq = B.decode_strings_arrow(blob, symbols)
+                    dict_cache[(sid, name, bi)] = uniq
+                hits = p["match"](uniq)
+                if hits.size:
+                    codes[(sid, bi)] = hits
+                    dicts[(sid, bi)] = uniq
+            return codes, dicts
+
+        surviving: set[int] | None = None
+        for p in int_preds:
+            s = _int_phase1(p)
+            surviving = s if surviving is None else (surviving & s)
+            if not surviving:
+                break
+        mem_codes: list[dict[tuple[str, int], np.ndarray]] = []
+        mem_dicts: list[dict[tuple[str, int], object]] = []
+        if surviving is None or surviving:
+            for p in mem_preds:
+                codes, dicts = _mem_phase1(p)
+                mem_codes.append(codes)
+                mem_dicts.append(dicts)
+                s = {bi for _, bi in codes}
+                surviving = (
+                    s if surviving is None else (surviving & s)
+                )
+                if not surviving:
+                    break
+        # OR nodes: each node's survivors are the UNION of its
+        # leaf survivors; the file still INTERSECTS across nodes
+        or_leaf: list[list] = []
+        if surviving is None or surviving:
+            for node in or_nodes:
+                node_surv: set[int] = set()
+                ldata: list = []
+                for leaf in node:
+                    if leaf["kind"] == "andgroup":
+                        # group survivors = INTERSECTION over its
+                        # conjuncts (the branch is an AND)
+                        g_surv: set[int] | None = None
+                        adata: list = []
+                        for atom in leaf["specs"]:
+                            if atom["kind"] in ("range", "valid"):
+                                s = _int_phase1(atom)
+                                adata.append(None)
+                            else:
+                                codes, dicts = _mem_phase1(atom)
+                                adata.append((codes, dicts))
+                                s = {bi for _, bi in codes}
+                            g_surv = (
+                                s if g_surv is None
+                                else (g_surv & s)
+                            )
+                        node_surv |= g_surv or set()
+                        ldata.append(adata)
+                    elif leaf["kind"] in ("range", "valid"):
+                        node_surv |= _int_phase1(leaf)
+                        ldata.append(None)
+                    else:
+                        codes, dicts = _mem_phase1(leaf)
+                        ldata.append((codes, dicts))
+                        node_surv |= {bi for _, bi in codes}
+                or_leaf.append(ldata)
+                surviving = (
+                    node_surv if surviving is None
+                    else (surviving & node_surv)
+                )
+                if not surviving:
+                    break
+        if not surviving:
+            return None
+        surviving_idx = sorted(surviving)
+        # SEGMENT-FULL predicates: a predicate that full-matches
+        # EVERY surviving block contributes an all-true mask, so
+        # it never decodes — and if nothing else references its
+        # column, the column's payload is never even READ (on a
+        # zone-map-clustered range the interior tasks read ONLY
+        # the projected columns; the predicate column's whole
+        # row group skips).
+        def _keys_of(c):
+            return [k for k in col_info[c] if k[1] in surviving]
+
+        int_full = []
+        for p in int_preds:
+            clmap = _int_leaf_class_map(p, col_info[p["col"]])
+            keys_c = _keys_of(p["col"])
+            int_full.append(
+                bool(keys_c)
+                and all(clmap.get(k) == "full" for k in keys_c)
+            )
+        mem_full_flags = []
+        for pi, p in enumerate(mem_preds):
+            keys_c = _keys_of(p["col"])
+            mem_full_flags.append(
+                bool(keys_c)
+                and all(
+                    k in mem_codes[pi]
+                    and mem_codes[pi][k].size
+                    == len(mem_dicts[pi][k])
+                    and col_info[p["col"]][k][1] == 0
+                    for k in keys_c
+                )
+            )
+        needed_mask_cols = {
+            p["col"]
+            for i, p in enumerate(int_preds)
+            if not int_full[i]
+        } | {
+            p["col"]
+            for pi, p in enumerate(mem_preds)
+            if not mem_full_flags[pi] and not p.get("mask_free")
+        } | {
+            atom["col"] for node in or_nodes for leaf in node
+            for atom in _leaf_atoms(leaf)
+        }
+        read_names = list(dict.fromkeys(
+            [*[c for c in pred_cols if c in needed_mask_cols],
+             *out_names]
+        ))
+        return {
+            "col_info": col_info, "surviving": surviving_idx,
+            "mem_codes": mem_codes, "mem_dicts": mem_dicts,
+            "or_leaf": or_leaf, "int_full": int_full,
+            "mem_full_flags": mem_full_flags,
+            "read_names": read_names,
+        }
+
+    def bill(plan) -> int:
+        if plan is None:
+            return 0
+        surv = set(plan["surviving"])
+        rows = next(iter(plan["col_info"].values()), {})
+        return len(plan["read_names"]) * sum(
+            v[0] for k, v in rows.items() if k[1] in surv
+        )
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from rlv import blocks as B
 
-        tune_malloc()
-        meta_pred_cols = sorted(
-            {p["col"] for p in int_preds}
-            | {atom["col"] for node in or_nodes for leaf in node
-               for atom in _leaf_atoms(leaf)
-               if atom["kind"] in ("range", "valid")}
+        if plan is None:
+            return _empty_frame()
+        surviving_idx = plan["surviving"]
+        mem_codes, mem_dicts = plan["mem_codes"], plan["mem_dicts"]
+        or_leaf, int_full = plan["or_leaf"], plan["int_full"]
+        mem_full_flags = plan["mem_full_flags"]
+        read_names = plan["read_names"]
+        # phase 2 — payloads for SURVIVING block ordinals only (the
+        # in-filter over-reads a block_idx that survives in one
+        # segment but not another; segments prune exactly below),
+        # and only for columns a mask or the projection needs
+        btbl = _read_filtered(
+            path,
+            ["split_seq", "col_name", "block_idx", "n_values",
+             "n_nulls", "n_runs", "min_val", "max_val", "block"],
+            col=read_names, seg=seg, block_idx=surviving_idx,
         )
-        all_mem_cols = sorted(
-            set(mem_cols)
-            | {atom["col"] for node in or_nodes for leaf in node
-               for atom in _leaf_atoms(leaf)
-               if atom["kind"] == "member"}
+        # dictionaries only for the PROJECTED string columns'
+        # surviving ordinals (a member pred's column needs no
+        # second read: eq kept rows ARE the literal, the rest
+        # gather from phase 1's cached dictionaries)
+        proj_strs = sorted(
+            c for c in str_cols.intersection(out_names)
+            if c not in mem_by_col
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — METADATA only (no payload column): ONE
-                # payload-free read covers every metadata-predicate column
-                # (top-level + OR leaves) and classification runs in
-                # Python — exact, incl. IN-list literal membership (a
-                # parquet [min, max] envelope filter would keep blocks no
-                # literal falls inside); ONE sidecar read covers every
-                # membership column, each dictionary decoded once however
-                # many preds reference it.  The file's surviving ordinals
-                # are the INTERSECTION across preds; pruned blocks never
-                # materialize payload.
-                # metadata covers the membership columns too: their
-                # (n_values, n_nulls) let a member pred whose whole
-                # dictionary matches a no-NULL block classify FULL, which
-                # the payload planner below exploits
-                meta_read_cols = sorted(
-                    set(meta_pred_cols) | set(all_mem_cols)
+        side = (
+            _read_dict_sidecar(
+                path, file_sid, col=proj_strs,
+                block_idx=surviving_idx, seg=seg,
+            )
+            if proj_strs
+            else {}
+        )
+        outs: dict[str, list] = {c: [] for c in out_names}
+        for seq, sseg in _split_segments(btbl, file_sid):
+            per: dict[str, dict[int, tuple]] = {
+                c: {} for c in read_names
+            }
+            for name, bi, nv, nn, nr, mn, mx, blob in zip(
+                sseg.column("col_name").to_pylist(),
+                sseg.column("block_idx").to_numpy(),
+                sseg.column("n_values").to_numpy(),
+                sseg.column("n_nulls").to_numpy(),
+                sseg.column("n_runs").to_numpy(),
+                sseg.column("min_val").to_numpy(),
+                sseg.column("max_val").to_numpy(),
+                sseg.column("block").to_pylist(),
+            ):
+                per[name][int(bi)] = (
+                    int(nv), int(nr), int(mn), int(mx), blob,
+                    int(nn),
                 )
-                col_info: dict[str, dict[tuple[str, int], tuple]] = {
-                    c: {} for c in meta_read_cols
+            # segment-exact survivors: re-run every NON-FULL
+            # pred's block test against THIS segment's metadata
+            # and intersect (a segment-full pred survives all its
+            # keys by construction; its column may not be read)
+            surv: set[int] | None = None
+            for i, p in enumerate(int_preds):
+                if int_full[i]:
+                    continue
+                s = {
+                    bi
+                    for bi, (nv, nr, mn, mx, _, nn)
+                    in per[p["col"]].items()
+                    if _int_pred_class(p, nv, nn, nr, mn, mx)
+                    is not None
                 }
-                if meta_read_cols:
-                    filters: list = [("col_name", "in", meta_read_cols)]
-                    if seg is not None:
-                        filters.append(("split_seq", "=", seg))
-                    meta = pq.read_table(
-                        path,
-                        columns=["split_seq", "col_name", "block_idx",
-                                 "n_values", "n_nulls", "n_runs",
-                                 "min_val", "max_val"],
-                        filters=filters,
-                    ).combine_chunks()
-                    for sid, mseg in _split_segments(meta, file_sid):
-                        for name, bi, nv, nn, nr, mn, mx in zip(
-                            mseg.column("col_name").to_pylist(),
-                            mseg.column("block_idx").to_numpy(),
-                            mseg.column("n_values").to_numpy(),
-                            mseg.column("n_nulls").to_numpy(),
-                            mseg.column("n_runs").to_numpy(),
-                            mseg.column("min_val").to_numpy(),
-                            mseg.column("max_val").to_numpy(),
-                        ):
-                            col_info[name][(sid, int(bi))] = (
-                                int(nv), int(nn), int(nr), int(mn),
-                                int(mx),
-                            )
-
-                def _int_phase1(p, col_info=col_info) -> set[int]:
+                surv = s if surv is None else (surv & s)
+            for pi, p in enumerate(mem_preds):
+                if mem_full_flags[pi] or p.get("mask_free"):
+                    continue
+                s = {
+                    bi for bi in per[p["col"]]
+                    if (seq, bi) in mem_codes[pi]
+                }
+                surv = s if surv is None else (surv & s)
+            def _atom_seg_surv(atom, ld, per=per, seq=seq):
+                if atom["kind"] in ("range", "valid"):
                     return {
-                        bi for _, bi
-                        in _int_leaf_class_map(p, col_info[p["col"]])
+                        bi
+                        for bi, (nv, nr, mn, mx, _, nn)
+                        in per[atom["col"]].items()
+                        if _int_pred_class(
+                            atom, nv, nn, nr, mn, mx
+                        ) is not None
                     }
-
-                # sidecar read is LAZY: when the int-predicate
-                # intersection already pruned the whole file (the common
-                # case on a zone-map-clustered range), no dictionary byte
-                # is ever read
-                side_state: dict = {}
-                dict_cache: dict[tuple[str, str, int], object] = {}
-
-                def _mem_phase1(p, path=path, file_sid=file_sid, seg=seg,
-                                side_state=side_state,
-                                dict_cache=dict_cache):
-                    if "side" not in side_state:
-                        side_state["side"] = _read_dict_sidecar(
-                            path, file_sid, col=all_mem_cols, seg=seg,
-                        )
-                    codes: dict[tuple[str, int], np.ndarray] = {}
-                    dicts: dict[tuple[str, int], object] = {}
-                    for (sid, name, bi), blob in side_state["side"].items():
-                        if name != p["col"]:
-                            continue
-                        uniq = dict_cache.get((sid, name, bi))
-                        if uniq is None:
-                            uniq = B.decode_strings_arrow(blob, symbols)
-                            dict_cache[(sid, name, bi)] = uniq
-                        hits = p["match"](uniq)
-                        if hits.size:
-                            codes[(sid, bi)] = hits
-                            dicts[(sid, bi)] = uniq
-                    return codes, dicts
-
-                surviving: set[int] | None = None
-                for p in int_preds:
-                    s = _int_phase1(p)
-                    surviving = s if surviving is None else (surviving & s)
-                    if not surviving:
-                        break
-                mem_codes: list[dict[tuple[str, int], np.ndarray]] = []
-                mem_dicts: list[dict[tuple[str, int], object]] = []
-                if surviving is None or surviving:
-                    for p in mem_preds:
-                        codes, dicts = _mem_phase1(p)
-                        mem_codes.append(codes)
-                        mem_dicts.append(dicts)
-                        s = {bi for _, bi in codes}
-                        surviving = (
-                            s if surviving is None else (surviving & s)
-                        )
-                        if not surviving:
-                            break
-                # OR nodes: each node's survivors are the UNION of its
-                # leaf survivors; the file still INTERSECTS across nodes
-                or_leaf: list[list] = []
-                if surviving is None or surviving:
-                    for node in or_nodes:
-                        node_surv: set[int] = set()
-                        ldata: list = []
-                        for leaf in node:
-                            if leaf["kind"] == "andgroup":
-                                # group survivors = INTERSECTION over its
-                                # conjuncts (the branch is an AND)
-                                g_surv: set[int] | None = None
-                                adata: list = []
-                                for atom in leaf["specs"]:
-                                    if atom["kind"] in ("range", "valid"):
-                                        s = _int_phase1(atom)
-                                        adata.append(None)
-                                    else:
-                                        codes, dicts = _mem_phase1(atom)
-                                        adata.append((codes, dicts))
-                                        s = {bi for _, bi in codes}
-                                    g_surv = (
-                                        s if g_surv is None
-                                        else (g_surv & s)
-                                    )
-                                node_surv |= g_surv or set()
-                                ldata.append(adata)
-                            elif leaf["kind"] in ("range", "valid"):
-                                node_surv |= _int_phase1(leaf)
-                                ldata.append(None)
-                            else:
-                                codes, dicts = _mem_phase1(leaf)
-                                ldata.append((codes, dicts))
-                                node_surv |= {bi for _, bi in codes}
-                        or_leaf.append(ldata)
-                        surviving = (
-                            node_surv if surviving is None
-                            else (surviving & node_surv)
-                        )
-                        if not surviving:
-                            break
-                if not surviving:
-                    yield _empty_frame()
-                    continue
-                surviving_idx = sorted(surviving)
-                # SEGMENT-FULL predicates: a predicate that full-matches
-                # EVERY surviving block contributes an all-true mask, so
-                # it never decodes — and if nothing else references its
-                # column, the column's payload is never even READ (on a
-                # zone-map-clustered range the interior tasks read ONLY
-                # the projected columns; the predicate column's whole
-                # row group skips).
-                def _keys_of(c):
-                    return [k for k in col_info[c] if k[1] in surviving]
-
-                int_full = []
-                for p in int_preds:
-                    clmap = _int_leaf_class_map(p, col_info[p["col"]])
-                    keys_c = _keys_of(p["col"])
-                    int_full.append(
-                        bool(keys_c)
-                        and all(clmap.get(k) == "full" for k in keys_c)
-                    )
-                mem_full_flags = []
-                for pi, p in enumerate(mem_preds):
-                    keys_c = _keys_of(p["col"])
-                    mem_full_flags.append(
-                        bool(keys_c)
-                        and all(
-                            k in mem_codes[pi]
-                            and mem_codes[pi][k].size
-                            == len(mem_dicts[pi][k])
-                            and col_info[p["col"]][k][1] == 0
-                            for k in keys_c
-                        )
-                    )
-                needed_mask_cols = {
-                    p["col"]
-                    for i, p in enumerate(int_preds)
-                    if not int_full[i]
-                } | {
-                    p["col"]
-                    for pi, p in enumerate(mem_preds)
-                    if not mem_full_flags[pi] and not p.get("mask_free")
-                } | {
-                    atom["col"] for node in or_nodes for leaf in node
-                    for atom in _leaf_atoms(leaf)
+                codes, _ = ld
+                return {
+                    bi for bi in per[atom["col"]]
+                    if (seq, bi) in codes
                 }
-                # phase 2 — payloads for SURVIVING block ordinals only (the
-                # in-filter over-reads a block_idx that survives in one
-                # segment but not another; segments prune exactly below),
-                # and only for columns a mask or the projection needs
-                read_names = list(dict.fromkeys(
-                    [*[c for c in pred_cols if c in needed_mask_cols],
-                     *out_names]
-                ))
-                filters2: list = [
-                    ("col_name", "in", read_names),
-                    ("block_idx", "in", surviving_idx),
-                ]
-                if seg is not None:
-                    filters2.append(("split_seq", "=", seg))
-                btbl = pq.read_table(
-                    path,
-                    columns=["split_seq", "col_name", "block_idx",
-                             "n_values", "n_nulls", "n_runs", "min_val",
-                             "max_val", "block"],
-                    filters=filters2,
-                ).combine_chunks()
-                # dictionaries only for the PROJECTED string columns'
-                # surviving ordinals (a member pred's column needs no
-                # second read: eq kept rows ARE the literal, the rest
-                # gather from phase 1's cached dictionaries)
-                proj_strs = sorted(
-                    c for c in str_cols.intersection(out_names)
-                    if c not in mem_by_col
+
+            for node, ldata in zip(or_nodes, or_leaf):
+                s = set()
+                for leaf, ld in zip(node, ldata):
+                    if leaf["kind"] == "andgroup":
+                        gs: set[int] | None = None
+                        for atom, ad in zip(leaf["specs"], ld):
+                            asrv = _atom_seg_surv(atom, ad)
+                            gs = asrv if gs is None \
+                                else (gs & asrv)
+                        s |= gs or set()
+                    else:
+                        s |= _atom_seg_surv(leaf, ld)
+                surv = s if surv is None else (surv & s)
+            if surv is None:
+                # every pred segment-full: all fetched ordinals of
+                # this segment survive
+                surv = set(per[read_names[0]])
+            survivors = sorted(surv)
+            if not survivors:
+                continue
+            anchor = read_names[0]
+            decoded: dict[str, tuple] = {}
+
+            def _decode_col(c, per=per, survivors=survivors,
+                            decoded=decoded, anchor=anchor):
+                if c in decoded:
+                    return decoded[c]
+                for bi in survivors:
+                    if per[c][bi][0] != per[anchor][bi][0]:
+                        raise ValueError(
+                            f"column {c!r} and {anchor!r} disagree "
+                            f"on rows in block {bi} — corrupt "
+                            "dataset"
+                        )
+                trip = B.decode_blocks_batch_nullable(
+                    [per[c][bi][4] for bi in survivors],
+                    np.int64,
+                    expected=[per[c][bi][0] for bi in survivors],
                 )
-                side = (
-                    _read_dict_sidecar(
-                        path, file_sid, col=proj_strs,
-                        block_idx=surviving_idx, seg=seg,
-                    )
-                    if proj_strs
-                    else {}
-                )
-                outs: dict[str, list] = {c: [] for c in out_names}
-                for seq, sseg in _split_segments(btbl, file_sid):
-                    per: dict[str, dict[int, tuple]] = {
-                        c: {} for c in read_names
-                    }
-                    for name, bi, nv, nn, nr, mn, mx, blob in zip(
-                        sseg.column("col_name").to_pylist(),
-                        sseg.column("block_idx").to_numpy(),
-                        sseg.column("n_values").to_numpy(),
-                        sseg.column("n_nulls").to_numpy(),
-                        sseg.column("n_runs").to_numpy(),
-                        sseg.column("min_val").to_numpy(),
-                        sseg.column("max_val").to_numpy(),
-                        sseg.column("block").to_pylist(),
-                    ):
-                        per[name][int(bi)] = (
-                            int(nv), int(nr), int(mn), int(mx), blob,
-                            int(nn),
+                if decoded:
+                    ref = next(iter(decoded.values()))[1]
+                    if not np.array_equal(trip[1], ref):
+                        raise ValueError(
+                            f"column {c!r} and {anchor!r} blocks "
+                            "disagree on row counts — corrupt "
+                            "dataset"
                         )
-                    # segment-exact survivors: re-run every NON-FULL
-                    # pred's block test against THIS segment's metadata
-                    # and intersect (a segment-full pred survives all its
-                    # keys by construction; its column may not be read)
-                    surv: set[int] | None = None
-                    for i, p in enumerate(int_preds):
-                        if int_full[i]:
-                            continue
-                        s = {
-                            bi
-                            for bi, (nv, nr, mn, mx, _, nn)
-                            in per[p["col"]].items()
-                            if _int_pred_class(p, nv, nn, nr, mn, mx)
-                            is not None
-                        }
-                        surv = s if surv is None else (surv & s)
-                    for pi, p in enumerate(mem_preds):
-                        if mem_full_flags[pi] or p.get("mask_free"):
-                            continue
-                        s = {
-                            bi for bi in per[p["col"]]
-                            if (seq, bi) in mem_codes[pi]
-                        }
-                        surv = s if surv is None else (surv & s)
-                    def _atom_seg_surv(atom, ld, per=per, seq=seq):
-                        if atom["kind"] in ("range", "valid"):
-                            return {
-                                bi
-                                for bi, (nv, nr, mn, mx, _, nn)
-                                in per[atom["col"]].items()
-                                if _int_pred_class(
-                                    atom, nv, nn, nr, mn, mx
-                                ) is not None
-                            }
-                        codes, _ = ld
-                        return {
-                            bi for bi in per[atom["col"]]
-                            if (seq, bi) in codes
-                        }
+                decoded[c] = trip
+                return trip
 
-                    for node, ldata in zip(or_nodes, or_leaf):
-                        s = set()
-                        for leaf, ld in zip(node, ldata):
-                            if leaf["kind"] == "andgroup":
-                                gs: set[int] | None = None
-                                for atom, ad in zip(leaf["specs"], ld):
-                                    asrv = _atom_seg_surv(atom, ad)
-                                    gs = asrv if gs is None \
-                                        else (gs & asrv)
-                                s |= gs or set()
-                            else:
-                                s |= _atom_seg_surv(leaf, ld)
-                        surv = s if surv is None else (surv & s)
-                    if surv is None:
-                        # every pred segment-full: all fetched ordinals of
-                        # this segment survive
-                        surv = set(per[read_names[0]])
-                    survivors = sorted(surv)
-                    if not survivors:
-                        continue
-                    anchor = read_names[0]
-                    decoded: dict[str, tuple] = {}
-
-                    def _decode_col(c, per=per, survivors=survivors,
-                                    decoded=decoded, anchor=anchor):
-                        if c in decoded:
-                            return decoded[c]
-                        for bi in survivors:
-                            if per[c][bi][0] != per[anchor][bi][0]:
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} disagree "
-                                    f"on rows in block {bi} — corrupt "
-                                    "dataset"
-                                )
-                        trip = B.decode_blocks_batch_nullable(
-                            [per[c][bi][4] for bi in survivors],
-                            np.int64,
-                            expected=[per[c][bi][0] for bi in survivors],
-                        )
-                        if decoded:
-                            ref = next(iter(decoded.values()))[1]
-                            if not np.array_equal(trip[1], ref):
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} blocks "
-                                    "disagree on row counts — corrupt "
-                                    "dataset"
-                                )
-                        decoded[c] = trip
-                        return trip
-
-                    # row mask = AND over the NON-FULL preds (a
-                    # segment-full pred matches every row — no decode)
-                    m = None
-                    for i, p in enumerate(int_preds):
-                        if int_full[i]:
-                            continue
-                        vals, _, vvalid = _decode_col(p["col"])
-                        pm = _int_pred_rowmask(p, vals, vvalid)
-                        m = pm if m is None else (m & pm)
-                    for pi, p in enumerate(mem_preds):
-                        if mem_full_flags[pi] or p.get("mask_free"):
-                            continue
-                        vals, voffs, vvalid = _decode_col(p["col"])
-                        # per-block code SETS; a block whose whole
-                        # dictionary matches skips the isin (every valid
-                        # row matches)
-                        pm = vvalid.copy()
-                        for j, bi in enumerate(survivors):
-                            codes = mem_codes[pi][(seq, bi)]
-                            if codes.size == len(mem_dicts[pi][(seq, bi)]):
-                                continue
-                            sl = slice(int(voffs[j]), int(voffs[j + 1]))
-                            pm[sl] &= np.isin(vals[sl], codes)
-                        m = pm if m is None else (m & pm)
-                    def _atom_rowmask(atom, ld, seq=seq,
-                                      survivors=survivors):
-                        vals, voffs, vvalid = _decode_col(atom["col"])
-                        if atom["kind"] in ("range", "valid"):
-                            return _int_pred_rowmask(atom, vals, vvalid)
-                        codes, dicts = ld
-                        pm = np.zeros(vvalid.size, bool)
-                        for j, bi in enumerate(survivors):
-                            cs = codes.get((seq, bi))
-                            if cs is None:
-                                continue
-                            sl = slice(int(voffs[j]), int(voffs[j + 1]))
-                            if cs.size == len(dicts[(seq, bi)]):
-                                pm[sl] = vvalid[sl]
-                            else:
-                                pm[sl] = vvalid[sl] & np.isin(
-                                    vals[sl], cs
-                                )
-                        return pm
-
-                    for node, ldata in zip(or_nodes, or_leaf):
-                        # node mask = UNION of leaf masks (a leaf with no
-                        # survivors at a block contributes nothing there);
-                        # an andgroup leaf's mask = AND over its conjuncts
-                        nm = None
-                        for leaf, ld in zip(node, ldata):
-                            if leaf["kind"] == "andgroup":
-                                pm = None
-                                for atom, ad in zip(leaf["specs"], ld):
-                                    am = _atom_rowmask(atom, ad)
-                                    pm = am if pm is None else (pm & am)
-                            else:
-                                pm = _atom_rowmask(leaf, ld)
-                            nm = pm if nm is None else (nm | pm)
-                        m = nm if m is None else (m & nm)
-                    if m is None:
-                        # every pred segment-full: keep all rows
-                        m = np.ones(
-                            sum(per[anchor][bi][0] for bi in survivors),
-                            dtype=bool,
-                        )
-                    for c in out_names:
-                        if c in eq_single_by_col:
-                            # eq predicate column: every kept row IS the
-                            # literal — no second decode, no dict gather
-                            outs[c].append(
-                                pa.array(
-                                    [eq_single_by_col[c]] * int(m.sum()),
-                                    pa.binary(),
-                                )
-                            )
-                            continue
-                        if c in mem_by_col:
-                            # member predicate column: gather kept rows
-                            # from phase 1's cached dictionaries through
-                            # the already-decoded code stream — no second
-                            # sidecar read, no second payload decode
-                            pi = mem_by_col[c]
-                            vals, voffs, _ = _decode_col(c)
-                            parts = []
-                            for j, bi in enumerate(survivors):
-                                sl = slice(int(voffs[j]),
-                                           int(voffs[j + 1]))
-                                codes = vals[sl][m[sl]]
-                                parts.append(
-                                    mem_dicts[pi][(seq, bi)].take(
-                                        pa.array(codes)
-                                    )
-                                )
-                            outs[c].append(
-                                pa.concat_arrays(
-                                    [p.combine_chunks()
-                                     if hasattr(p, "chunks") else p
-                                     for p in parts]
-                                )
-                            )
-                            continue
-                        if c in str_cols:
-                            # codes (validity-wrapped) + per-block dict
-                            # gather; a NULL code gathers a NULL value
-                            parts = []
-                            for bi in survivors:
-                                if per[c][bi][0] != per[anchor][bi][0]:
-                                    raise ValueError(
-                                        f"column {c!r} and {anchor!r} "
-                                        f"disagree on rows in block {bi} "
-                                        "— corrupt dataset"
-                                    )
-                                codes, _, cv = (
-                                    B.decode_blocks_batch_nullable(
-                                        [per[c][bi][4]], np.int64,
-                                        expected=[per[c][bi][0]],
-                                    )
-                                )
-                                uniq = B.decode_strings_arrow(
-                                    side[(seq, c, bi)], symbols
-                                )
-                                idx = (
-                                    pa.array(codes)
-                                    if cv.all()
-                                    else pa.array(codes, pa.int64(),
-                                                  mask=~cv)
-                                )
-                                parts.append(uniq.take(idx))
-                            arr = pa.concat_arrays(
-                                [p.combine_chunks() if hasattr(p, "chunks")
-                                 else p for p in parts]
-                            )
-                            if len(arr) != m.size:
-                                raise ValueError(
-                                    f"column {c!r} and {anchor!r} blocks "
-                                    "disagree on row counts"
-                                )
-                            outs[c].append(arr.filter(pa.array(m)))
-                        else:
-                            cv_vals, _, cv_valid = _decode_col(c)
-                            outs[c].append((cv_vals[m], ~cv_valid[m]))
-                if not outs[out_names[0]]:
-                    yield _empty_frame()
+            # row mask = AND over the NON-FULL preds (a
+            # segment-full pred matches every row — no decode)
+            m = None
+            for i, p in enumerate(int_preds):
+                if int_full[i]:
                     continue
-                yield pd.DataFrame(
-                    {
-                        c: (
-                            pa.concat_arrays(outs[c])
-                            .cast(pa.string())
-                            .to_pandas()
-                            if c in str_cols
-                            else pd.Series(
-                                pd.arrays.IntegerArray(
-                                    np.concatenate(
-                                        [v for v, _ in outs[c]]
-                                    ),
-                                    np.concatenate(
-                                        [mk for _, mk in outs[c]]
-                                    ),
-                                )
+                vals, _, vvalid = _decode_col(p["col"])
+                pm = _int_pred_rowmask(p, vals, vvalid)
+                m = pm if m is None else (m & pm)
+            for pi, p in enumerate(mem_preds):
+                if mem_full_flags[pi] or p.get("mask_free"):
+                    continue
+                vals, voffs, vvalid = _decode_col(p["col"])
+                # per-block code SETS; a block whose whole
+                # dictionary matches skips the isin (every valid
+                # row matches)
+                pm = vvalid.copy()
+                for j, bi in enumerate(survivors):
+                    codes = mem_codes[pi][(seq, bi)]
+                    if codes.size == len(mem_dicts[pi][(seq, bi)]):
+                        continue
+                    sl = slice(int(voffs[j]), int(voffs[j + 1]))
+                    pm[sl] &= np.isin(vals[sl], codes)
+                m = pm if m is None else (m & pm)
+            def _atom_rowmask(atom, ld, seq=seq,
+                              survivors=survivors):
+                vals, voffs, vvalid = _decode_col(atom["col"])
+                if atom["kind"] in ("range", "valid"):
+                    return _int_pred_rowmask(atom, vals, vvalid)
+                codes, dicts = ld
+                pm = np.zeros(vvalid.size, bool)
+                for j, bi in enumerate(survivors):
+                    cs = codes.get((seq, bi))
+                    if cs is None:
+                        continue
+                    sl = slice(int(voffs[j]), int(voffs[j + 1]))
+                    if cs.size == len(dicts[(seq, bi)]):
+                        pm[sl] = vvalid[sl]
+                    else:
+                        pm[sl] = vvalid[sl] & np.isin(
+                            vals[sl], cs
+                        )
+                return pm
+
+            for node, ldata in zip(or_nodes, or_leaf):
+                # node mask = UNION of leaf masks (a leaf with no
+                # survivors at a block contributes nothing there);
+                # an andgroup leaf's mask = AND over its conjuncts
+                nm = None
+                for leaf, ld in zip(node, ldata):
+                    if leaf["kind"] == "andgroup":
+                        pm = None
+                        for atom, ad in zip(leaf["specs"], ld):
+                            am = _atom_rowmask(atom, ad)
+                            pm = am if pm is None else (pm & am)
+                    else:
+                        pm = _atom_rowmask(leaf, ld)
+                    nm = pm if nm is None else (nm | pm)
+                m = nm if m is None else (m & nm)
+            if m is None:
+                # every pred segment-full: keep all rows
+                m = np.ones(
+                    sum(per[anchor][bi][0] for bi in survivors),
+                    dtype=bool,
+                )
+            for c in out_names:
+                if c in eq_single_by_col:
+                    # eq predicate column: every kept row IS the
+                    # literal — no second decode, no dict gather
+                    outs[c].append(
+                        pa.array(
+                            [eq_single_by_col[c]] * int(m.sum()),
+                            pa.binary(),
+                        )
+                    )
+                    continue
+                if c in mem_by_col:
+                    # member predicate column: gather kept rows
+                    # from phase 1's cached dictionaries through
+                    # the already-decoded code stream — no second
+                    # sidecar read, no second payload decode
+                    pi = mem_by_col[c]
+                    vals, voffs, _ = _decode_col(c)
+                    parts = []
+                    for j, bi in enumerate(survivors):
+                        sl = slice(int(voffs[j]),
+                                   int(voffs[j + 1]))
+                        codes = vals[sl][m[sl]]
+                        parts.append(
+                            mem_dicts[pi][(seq, bi)].take(
+                                pa.array(codes)
                             )
                         )
-                        for c in out_names
-                    }
+                    outs[c].append(
+                        pa.concat_arrays(
+                            [p.combine_chunks()
+                             if hasattr(p, "chunks") else p
+                             for p in parts]
+                        )
+                    )
+                    continue
+                if c in str_cols:
+                    # codes (validity-wrapped) + per-block dict
+                    # gather; a NULL code gathers a NULL value
+                    parts = []
+                    for bi in survivors:
+                        if per[c][bi][0] != per[anchor][bi][0]:
+                            raise ValueError(
+                                f"column {c!r} and {anchor!r} "
+                                f"disagree on rows in block {bi} "
+                                "— corrupt dataset"
+                            )
+                        codes, _, cv = (
+                            B.decode_blocks_batch_nullable(
+                                [per[c][bi][4]], np.int64,
+                                expected=[per[c][bi][0]],
+                            )
+                        )
+                        uniq = B.decode_strings_arrow(
+                            side[(seq, c, bi)], symbols
+                        )
+                        idx = (
+                            pa.array(codes)
+                            if cv.all()
+                            else pa.array(codes, pa.int64(),
+                                          mask=~cv)
+                        )
+                        parts.append(uniq.take(idx))
+                    arr = pa.concat_arrays(
+                        [p.combine_chunks() if hasattr(p, "chunks")
+                         else p for p in parts]
+                    )
+                    if len(arr) != m.size:
+                        raise ValueError(
+                            f"column {c!r} and {anchor!r} blocks "
+                            "disagree on row counts"
+                        )
+                    outs[c].append(arr.filter(pa.array(m)))
+                else:
+                    cv_vals, _, cv_valid = _decode_col(c)
+                    outs[c].append((cv_vals[m], ~cv_valid[m]))
+        if not outs[out_names[0]]:
+            return _empty_frame()
+        return pd.DataFrame(
+            {
+                c: (
+                    pa.concat_arrays(outs[c])
+                    .cast(pa.string())
+                    .to_pandas()
+                    if c in str_cols
+                    else pd.Series(
+                        pd.arrays.IntegerArray(
+                            np.concatenate(
+                                [v for v, _ in outs[c]]
+                            ),
+                            np.concatenate(
+                                [mk for _, mk in outs[c]]
+                            ),
+                        )
+                    )
                 )
+                for c in out_names
+            }
+        )
 
-    return run_scan
+    return _TaskOp(finish, phase1, bill)
 
 
 def scan_table_files(
@@ -3282,7 +3457,7 @@ def strdict_stats(enc_dir: str, col: str, value: str) -> dict:
     needle = value.encode("utf-8")
     total = match = 0
     for bpath in _live_block_files(enc_dir):
-        sid = os.path.splitext(os.path.basename(bpath))[0]
+        sid = _file_sid(bpath)
         for blob in _read_dict_sidecar(bpath, sid, col=col).values():
             total += 1
             uniq = B.decode_strings_arrow(blob, syms)
@@ -3330,14 +3505,9 @@ def _run_scan_tasks(spark: SparkSession, enc_dir: str, schema: dict,
         f"`{c}` {'string' if c in str_cols else 'bigint'}"
         for c in out_names
     )
-    if tasks.empty:
-        # all splits dead (e.g. freshly-initialized dataset): empty result,
-        # same shape — repartition(0) would throw
-        out = spark.createDataFrame([], scan_schema)
-    else:
-        out = _spark_tasks(spark, tasks).mapInPandas(worker, scan_schema)
-    from pyspark.sql import functions as F
-
+    # all splits dead (e.g. freshly-initialized dataset): the dispatcher
+    # returns the empty result, same shape
+    out = _dispatch(spark, tasks, worker, scan_schema)
     return out.select(
         *[_typed_out_expr(schema, c) for c in out_names]
     )
@@ -3670,21 +3840,12 @@ def _classify_file(path: str, file_sid: str, seg: str | None,
     map when ``with_enc_bytes`` else None; ``sums`` is the per-column
     ``{key: exact valid-value sum}`` map (values None when the file
     predates the ``sum_val`` stat — callers fall back to payload)."""
-    import pyarrow.parquet as pq
-
     meta_cols = ["split_seq", "col_name", "block_idx", "n_values",
-                 "n_nulls", "n_runs", "min_val", "max_val"]
-    has_sums = "sum_val" in pq.read_schema(path).names
-    if has_sums:
-        meta_cols.append("sum_val")
+                 "n_nulls", "n_runs", "min_val", "max_val", "sum_val"]
     if with_enc_bytes:
         meta_cols.append("enc_bytes")
-    filters: list = [("col_name", "in", all_cols)]
-    if seg is not None:
-        filters.append(("split_seq", "=", seg))
-    meta = pq.read_table(
-        path, columns=meta_cols, filters=filters,
-    ).combine_chunks()
+    meta = _read_filtered(path, meta_cols, col=all_cols, seg=seg)
+    has_sums = "sum_val" in meta.column_names
     info: dict[str, dict[tuple[str, int], tuple]] = {
         c: {} for c in all_cols
     }
@@ -3763,22 +3924,13 @@ def _fetch_payloads(path: str, file_sid: str, seg: str | None,
     segment of a compacted file (callers look up exact keys); a
     segment-scoped task pushes the ``split_seq`` filter so the read prunes
     to its own row groups instead."""
-    import pyarrow.parquet as pq
-
     blobs: dict[tuple[str, str, int], bytes] = {}
     for c in sorted(need):
         idxs = need[c]
         if not idxs:
             continue
-        filters: list = [("col_name", "=", c),
-                         ("block_idx", "in", sorted(idxs))]
-        if seg is not None:
-            filters.append(("split_seq", "=", seg))
-        t = pq.read_table(
-            path,
-            columns=["split_seq", "block_idx", "block"],
-            filters=filters,
-        ).combine_chunks()
+        t = _read_filtered(path, ["split_seq", "block_idx", "block"],
+                           col=c, seg=seg, block_idx=idxs)
         for sid, segment in _split_segments(t, file_sid):
             for bi, blob in zip(
                 segment.column("block_idx").to_numpy(),
@@ -3801,143 +3953,136 @@ def _make_agg_worker(value_cols: list[str], preds: list[dict],
     there, AND the masks, and pick the value rows.  One pass classifies
     and masks for ALL value columns: k aggregate sets cost one predicate
     evaluation, not k.  Emits one labeled row per value column."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*pred_cols, *value_cols]))
 
-    def run_agg(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
 
+    def phase1(path, file_sid, seg):
+        # phase 1 — METADATA for every involved column in one
+        # payload-free read; member preds additionally decode their
+        # (small) dictionary sidecars.  `full` blocks match every
+        # row without decoding the predicate; `partial` blocks
+        # decode; the rest are pruned and never read again.
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, sums = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        if not cls:
+            return None
+        # columns needing payload: at partial keys, each pred col
+        # where that pred is not full there plus every value
+        # column; at full keys the block stats (n_nulls, sum_val,
+        # zone map) ARE the aggregate — no value payload is read
+        # (pre-sum_val files fall back to the payload there)
+        need: dict[str, set[int]] = {
+            vc: set() for vc in value_cols
+        }
+        for key, kind in cls.items():
+            if kind != "partial":
+                for vc in value_cols:
+                    if sums[vc].get(key) is None:
+                        need[vc].add(key[1])
+                continue
+            for vc in value_cols:
+                need[vc].add(key[1])
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes, or_data):
+                need.setdefault(c, set()).add(key[1])
+        return info, cls, pred_cls, mem_codes, mem_full, or_data, sums, need
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — METADATA for every involved column in one
-                # payload-free read; member preds additionally decode their
-                # (small) dictionary sidecars.  `full` blocks match every
-                # row without decoding the predicate; `partial` blocks
-                # decode; the rest are pruned and never read again.
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
+        if plan is None:
+            return _agg_frame(
+                value_cols, 0,
+                {vc: [0, 0, None, None] for vc in value_cols},
+            )
+        info, cls, pred_cls, mem_codes, mem_full, or_data, sums, need = plan
+        # phase 2 — payloads for needed (column, ordinal) pairs
+        # only (per-key lookups below are exact)
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        n_rows = 0
+        stats: dict[str, list] = {
+            vc: [0, 0, None, None] for vc in value_cols
+        }
+        for key in sorted(cls):
+            seq, bi = key
+            nv = info[value_cols[0]][key][0]
+            for vc in value_cols:
+                if bi in need[vc] and (seq, vc, bi) not in blobs:
+                    raise ValueError(
+                        f"column {vc!r} is missing block "
+                        f"{bi} of segment {seq} — corrupt dataset"
                     )
-                if not cls:
-                    yield _agg_frame(
-                        value_cols, 0,
-                        {vc: [0, 0, None, None] for vc in value_cols},
-                    )
-                    continue
-                # columns needing payload: at partial keys, each pred col
-                # where that pred is not full there plus every value
-                # column; at full keys the block stats (n_nulls, sum_val,
-                # zone map) ARE the aggregate — no value payload is read
-                # (pre-sum_val files fall back to the payload there)
-                need: dict[str, set[int]] = {
-                    vc: set() for vc in value_cols
-                }
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        for vc in value_cols:
-                            if sums[vc].get(key) is None:
-                                need[vc].add(key[1])
+            if cls[key] == "full":
+                n_rows += nv
+                for vc in value_cols:
+                    ms = sums[vc].get(key)
+                    if ms is not None:
+                        # metadata-only: the block stats carry the
+                        # exact valid count, sum, and zone map
+                        vnv, vnn, vnr, vmn, vmx = info[vc][key]
+                        st = stats[vc]
+                        st[0] += vnv - vnn
+                        st[1] += ms
+                        if vnr > 0:
+                            st[2] = vmn if st[2] is None \
+                                else min(st[2], vmn)
+                            st[3] = vmx if st[3] is None \
+                                else max(st[3], vmx)
                         continue
-                    for vc in value_cols:
-                        need[vc].add(key[1])
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                # phase 2 — payloads for needed (column, ordinal) pairs
-                # only (per-key lookups below are exact)
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                n_rows = 0
-                stats: dict[str, list] = {
-                    vc: [0, 0, None, None] for vc in value_cols
-                }
-                for key in sorted(cls):
-                    seq, bi = key
-                    nv = info[value_cols[0]][key][0]
-                    for vc in value_cols:
-                        if bi in need[vc] and (seq, vc, bi) not in blobs:
-                            raise ValueError(
-                                f"column {vc!r} is missing block "
-                                f"{bi} of segment {seq} — corrupt dataset"
-                            )
-                    if cls[key] == "full":
-                        n_rows += nv
-                        for vc in value_cols:
-                            ms = sums[vc].get(key)
-                            if ms is not None:
-                                # metadata-only: the block stats carry the
-                                # exact valid count, sum, and zone map
-                                vnv, vnn, vnr, vmn, vmx = info[vc][key]
-                                st = stats[vc]
-                                st[0] += vnv - vnn
-                                st[1] += ms
-                                if vnr > 0:
-                                    st[2] = vmn if st[2] is None \
-                                        else min(st[2], vmn)
-                                    st[3] = vmx if st[3] is None \
-                                        else max(st[3], vmx)
-                                continue
-                            bn, bnv, bs, bmn, bmx = B.agg_block(
-                                blobs[(seq, vc, bi)]
-                            )
-                            if bn != nv:
-                                raise ValueError(
-                                    f"block {bi} declares {nv} rows but "
-                                    f"decodes {bn} — corrupt dataset"
-                                )
-                            st = stats[vc]
-                            st[0] += bnv
-                            st[1] += bs
-                            if bmn is not None:
-                                st[2] = bmn if st[2] is None \
-                                    else min(st[2], bmn)
-                                st[3] = bmx if st[3] is None \
-                                    else max(st[3], bmx)
-                    else:
-                        decoded: dict[str, tuple] = {}
-
-                        def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                            if c not in decoded:
-                                decoded[c] = B.decode_blocks_batch_nullable(
-                                    [blobs[(seq, c, bi)]], np.int64,
-                                    expected=[nv],
-                                )
-                            return decoded[c]
-
-                        mask = _pred_mask(
-                            key, nv, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
+                    bn, bnv, bs, bmn, bmx = B.agg_block(
+                        blobs[(seq, vc, bi)]
+                    )
+                    if bn != nv:
+                        raise ValueError(
+                            f"block {bi} declares {nv} rows but "
+                            f"decodes {bn} — corrupt dataset"
                         )
-                        n_rows += int(mask.sum())
-                        for vc in value_cols:
-                            vv, _, vvalid = _dec(vc)
-                            picked = vv[mask & vvalid]
-                            if picked.size == 0:
-                                continue
-                            st = stats[vc]
-                            st[0] += picked.size
-                            st[1] += B.exact_sum_i64(picked)
-                            bmn, bmx = int(picked.min()), int(picked.max())
-                            st[2] = bmn if st[2] is None \
-                                else min(st[2], bmn)
-                            st[3] = bmx if st[3] is None \
-                                else max(st[3], bmx)
-                yield _agg_frame(value_cols, n_rows, stats)
+                    st = stats[vc]
+                    st[0] += bnv
+                    st[1] += bs
+                    if bmn is not None:
+                        st[2] = bmn if st[2] is None \
+                            else min(st[2], bmn)
+                        st[3] = bmx if st[3] is None \
+                            else max(st[3], bmx)
+            else:
+                decoded: dict[str, tuple] = {}
 
-    return run_agg
+                def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
+                    if c not in decoded:
+                        decoded[c] = B.decode_blocks_batch_nullable(
+                            [blobs[(seq, c, bi)]], np.int64,
+                            expected=[nv],
+                        )
+                    return decoded[c]
+
+                mask = _pred_mask(
+                    key, nv, pred_cls, int_preds, mem_preds,
+                    mem_codes, mem_full, _dec, or_nodes, or_data,
+                )
+                n_rows += int(mask.sum())
+                for vc in value_cols:
+                    vv, _, vvalid = _dec(vc)
+                    picked = vv[mask & vvalid]
+                    if picked.size == 0:
+                        continue
+                    st = stats[vc]
+                    st[0] += picked.size
+                    st[1] += B.exact_sum_i64(picked)
+                    bmn, bmx = int(picked.min()), int(picked.max())
+                    st[2] = bmn if st[2] is None \
+                        else min(st[2], bmn)
+                    st[3] = bmx if st[3] is None \
+                        else max(st[3], bmx)
+        return _agg_frame(value_cols, n_rows, stats)
+
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def _agg_frame(value_cols: list[str], n_rows: int,
@@ -3983,9 +4128,9 @@ def agg_table_files(
     O(selectivity) — the same shape a warehouse gets from page-stats
     pushdown, served by our metadata.
 
-    One task per blocks file emits a partial; a K-row (K = files) final
-    combine produces the row — the only data ever shuffled.  ``sum_val`` is
-    decimal(38,0): per-block sums are exact Python ints
+    One task per blocks file emits a partial and the driver folds the
+    K partial rows (K = tasks) into the row — nothing is shuffled.
+    ``sum_val`` is decimal(38,0): per-block sums are exact Python ints
     (:func:`rlv.blocks.exact_sum_i64`), and 38 digits absorbs any
     real-world table (10^38 > rows * max|int64|), where a bigint
     accumulator could wrap.  SQL NULL semantics throughout: NULL predicate
@@ -4055,38 +4200,42 @@ def agg_table_files_where(
             _typed_out_expr(schema, value_cols[0], src="max_val"),
         ]
 
-    if tasks.empty:
-        base = spark.createDataFrame(
-            pd.DataFrame({"val_col": value_cols})
-        ).select(
-            "val_col",
-            F.lit(0).cast("bigint").alias("n_rows"),
-            F.lit(0).cast("bigint").alias("n_vals"),
-            F.lit(None).cast("decimal(38,0)").alias("_sum"),
-            F.lit(None).cast("bigint").alias("min_val"),
-            F.lit(None).cast("bigint").alias("max_val"),
+    def fold(parts):
+        from decimal import Decimal
+
+        # one row per value column even with no tasks (SQL: an empty
+        # match is (0, 0, NULL, NULL, NULL))
+        acc = {vc: [0, 0, 0, None, None] for vc in value_cols}
+        for part in parts:
+            for r in part.itertuples(index=False):
+                a = acc[r.val_col]
+                a[0] += int(r.n_rows)
+                a[1] += int(r.n_vals)
+                a[2] += int(r.sum_val)
+                if not pd.isna(r.min_val):
+                    mn, mx = int(r.min_val), int(r.max_val)
+                    a[3] = mn if a[3] is None else min(a[3], mn)
+                    a[4] = mx if a[4] is None else max(a[4], mx)
+        rows = [acc[vc] for vc in value_cols]
+        pdf = pd.DataFrame({
+            "val_col": pd.Series(value_cols, dtype=object),
+            "n_rows": pd.Series([a[0] for a in rows], dtype="int64"),
+            "n_vals": pd.Series([a[1] for a in rows], dtype="int64"),
+            "_sum": pd.Series([Decimal(a[2]) if a[1] else None
+                               for a in rows], dtype=object),
+            "min_val": pd.array([a[3] for a in rows], dtype="Int64"),
+            "max_val": pd.array([a[4] for a in rows], dtype="Int64"),
+        })
+        return _local_frame(
+            spark, pdf,
+            "val_col string, n_rows bigint, n_vals bigint, "
+            "_sum decimal(38,0), min_val bigint, max_val bigint",
         ).select("val_col", "n_rows", "n_vals", *_typed_agg_cols())
-        return base if multi else base.drop("val_col")
-    partials = _spark_tasks(spark, tasks).mapInPandas(
-        worker, "val_col string, " + AGG_PARTIAL_SCHEMA
+
+    combined = _dispatch(
+        spark, tasks, worker, "val_col string, " + AGG_PARTIAL_SCHEMA,
+        fold=fold,
     )
-    combined = partials.groupBy("val_col").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_vals").alias("n_vals"),
-        F.sum("sum_val").alias("_raw_sum"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-    ).select(
-        "val_col",
-        F.coalesce(F.col("n_rows"), F.lit(0)).cast("bigint").alias("n_rows"),
-        F.coalesce(F.col("n_vals"), F.lit(0)).cast("bigint").alias("n_vals"),
-        F.when(F.coalesce(F.col("n_vals"), F.lit(0)) == 0, F.lit(None))
-        .otherwise(F.col("_raw_sum"))
-        .cast("decimal(38,0)")
-        .alias("_sum"),
-        "min_val",
-        "max_val",
-    ).select("val_col", "n_rows", "n_vals", *_typed_agg_cols())
     return combined if multi else combined.drop("val_col")
 
 
@@ -4143,66 +4292,57 @@ def _make_count_worker(preds: list[dict],
     metadata alone (their recorded ``n_values``); only PARTIAL blocks
     decode — and only their non-full PREDICATE columns, never a value
     column.  One bigint per task."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     all_cols = _spec_cols(preds)
 
-    def run_count(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, _ = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        need: dict[str, set[int]] = {}
+        for key, kind in cls.items():
+            if kind != "partial":
+                continue
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes,
+                                     or_data):
+                need.setdefault(c, set()).add(key[1])
+        return info, cls, pred_cls, mem_codes, mem_full, or_data, need
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
+        info, cls, pred_cls, mem_codes, mem_full, or_data, need = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        n = 0
+        for key in sorted(cls):
+            nv = info[all_cols[0]][key][0]
+            if cls[key] == "full":
+                n += nv
+                continue
+            seq, bi = key
+            decoded: dict[str, tuple] = {}
+
+            def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
+                if c not in decoded:
+                    decoded[c] = B.decode_blocks_batch_nullable(
+                        [blobs[(seq, c, bi)]], np.int64,
+                        expected=[nv],
                     )
-                need: dict[str, set[int]] = {}
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                n = 0
-                for key in sorted(cls):
-                    nv = info[all_cols[0]][key][0]
-                    if cls[key] == "full":
-                        n += nv
-                        continue
-                    seq, bi = key
-                    decoded: dict[str, tuple] = {}
+                return decoded[c]
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
+            mask = _pred_mask(
+                key, nv, pred_cls, int_preds, mem_preds,
+                mem_codes, mem_full, _dec, or_nodes, or_data,
+            )
+            n += int(mask.sum())
+        return pd.DataFrame({"n_rows": [n]})
 
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    n += int(mask.sum())
-                yield pd.DataFrame({"n_rows": [n]})
-
-    return run_count
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
@@ -4228,21 +4368,18 @@ def count_table_files_where(spark: SparkSession, enc_dir: str, preds):
             0 if live is None
             else int(sum(int(n) for n in live["n_docs"]))
         )
-        return spark.createDataFrame([(total,)], "n_rows bigint")
+        return _local_frame(
+            spark, pd.DataFrame({"n_rows": [total]}), "n_rows bigint"
+        )
     specs = _norm_preds(schema, list(preds))
     worker = _make_count_worker(specs, symbols_hex=_symbols_hex(enc_dir))
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
-
-    if tasks.empty:
-        parts = spark.createDataFrame([], "n_rows bigint")
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, "n_rows bigint"
-        )
-    return parts.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint")
-        .alias("n_rows")
+    return _dispatch(
+        spark, _query_tasks(enc_dir), worker, "n_rows bigint",
+        fold=lambda parts: _local_frame(
+            spark,
+            pd.DataFrame({"n_rows": [_summed(parts, "n_rows")]}),
+            "n_rows bigint",
+        ),
     )
 
 
@@ -4253,80 +4390,71 @@ def _make_minmax_worker(value_col: str, preds: list[dict],
     value payload); only PARTIAL blocks decode the value column (plus
     their non-full predicate columns) and fold the masked values.  One
     nullable (min_val, max_val) row per task."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     all_cols = list(dict.fromkeys([*_spec_cols(preds), value_col]))
 
-    def run_minmax(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, _ = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        need: dict[str, set[int]] = {}
+        for key, kind in cls.items():
+            if kind != "partial":
+                continue
+            need.setdefault(value_col, set()).add(key[1])
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes,
+                                     or_data):
+                need.setdefault(c, set()).add(key[1])
+        return info, cls, pred_cls, mem_codes, mem_full, or_data, need
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+        info, cls, pred_cls, mem_codes, mem_full, or_data, need = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        mn = mx = None
+        for key in sorted(cls):
+            nv, nn, nr, bmn, bmx = info[value_col][key]
+            if cls[key] == "full":
+                if nr == 0:
+                    continue  # all-NULL value block
+                mn = bmn if mn is None else min(mn, bmn)
+                mx = bmx if mx is None else max(mx, bmx)
+                continue
+            seq, bi = key
+            decoded: dict[str, tuple] = {}
+
+            def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
+                if c not in decoded:
+                    decoded[c] = B.decode_blocks_batch_nullable(
+                        [blobs[(seq, c, bi)]], np.int64,
+                        expected=[nv],
+                    )
+                return decoded[c]
+
+            mask = _pred_mask(
+                key, nv, pred_cls, int_preds, mem_preds,
+                mem_codes, mem_full, _dec, or_nodes, or_data,
+            )
+            vv, _, vvalid = _dec(value_col)
+            picked = vv[mask & vvalid]
+            if picked.size:
+                pmn, pmx = int(picked.min()), int(picked.max())
+                mn = pmn if mn is None else min(mn, pmn)
+                mx = pmx if mx is None else max(mx, pmx)
+        return pd.DataFrame(
+            {
+                "min_val": pd.array([mn], dtype="Int64"),
+                "max_val": pd.array([mx], dtype="Int64"),
+            }
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                need: dict[str, set[int]] = {}
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    need.setdefault(value_col, set()).add(key[1])
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                mn = mx = None
-                for key in sorted(cls):
-                    nv, nn, nr, bmn, bmx = info[value_col][key]
-                    if cls[key] == "full":
-                        if nr == 0:
-                            continue  # all-NULL value block
-                        mn = bmn if mn is None else min(mn, bmn)
-                        mx = bmx if mx is None else max(mx, bmx)
-                        continue
-                    seq, bi = key
-                    decoded: dict[str, tuple] = {}
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    vv, _, vvalid = _dec(value_col)
-                    picked = vv[mask & vvalid]
-                    if picked.size:
-                        pmn, pmx = int(picked.min()), int(picked.max())
-                        mn = pmn if mn is None else min(mn, pmn)
-                        mx = pmx if mx is None else max(mx, pmx)
-                yield pd.DataFrame(
-                    {
-                        "min_val": pd.array([mn], dtype="Int64"),
-                        "max_val": pd.array([mx], dtype="Int64"),
-                    }
-                )
-
-    return run_minmax
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def minmax_table_files_where(spark: SparkSession, enc_dir: str,
@@ -4357,18 +4485,28 @@ def minmax_table_files_where(spark: SparkSession, enc_dir: str,
     worker = _make_minmax_worker(
         value_col, specs, symbols_hex=_symbols_hex(enc_dir)
     )
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
 
-    if tasks.empty:
-        parts = spark.createDataFrame([], "min_val bigint, max_val bigint")
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, "min_val bigint, max_val bigint"
-        )
-    folded = parts.agg(
-        F.min("min_val").cast("bigint").alias("min_val"),
-        F.max("max_val").cast("bigint").alias("max_val"),
+    def fold(parts):
+        vals = [
+            (int(mn), int(mx))
+            for p in parts
+            for mn, mx in zip(p["min_val"], p["max_val"])
+            if not pd.isna(mn)
+        ]
+        pdf = pd.DataFrame({
+            "min_val": pd.array(
+                [min(v[0] for v in vals) if vals else None], dtype="Int64"
+            ),
+            "max_val": pd.array(
+                [max(v[1] for v in vals) if vals else None], dtype="Int64"
+            ),
+        })
+        return _local_frame(spark, pdf, "min_val bigint, max_val bigint")
+
+    folded = _dispatch(
+        spark, _query_tasks(enc_dir), worker,
+        "min_val bigint, max_val bigint",
+        fold=fold,
     )
     # restore the value column's logical type (timestamp/date/float keys)
     return folded.select(
@@ -4438,8 +4576,6 @@ def _make_group_agg_worker(value_col: str, group_col: str,
     string group (one sidecar decode per block maps codes to names), raw
     values for an int group, NULL group keys pooled SQL-style.  Emits one
     partial row per (file, group)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([group_col, value_col, *pred_cols]))
@@ -4458,204 +4594,199 @@ def _make_group_agg_worker(value_col: str, group_col: str,
             }
         )
 
-    def run_group_agg(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        # phase 1 — one payload-free metadata read, inventory
+        # cross-checks, combined pruned/full/partial class
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, sums = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        if not cls:
+            return None
+
+        # single-group shortcut: a full-matching block whose group
+        # zone map is a point (min == max, no NULL keys) — or whose
+        # keys are ALL NULL — belongs to exactly one group, so its
+        # value stats row (count, n_nulls, sum_val, zone map) IS
+        # its partial: neither payload decodes.  On group-clustered
+        # data (cluster_encode_table_files) that makes GROUP BY
+        # metadata-only away from cluster boundaries.
+        single: dict[tuple[str, int], int | None] = {}
+        for key, kind in cls.items():
+            if kind != "full":
+                continue
+            if sums[value_col].get(key) is None:
+                continue  # pre-sum_val generation
+            gnv, gnn, gnr, gmn, gmx = info[group_col][key]
+            if gnn == 0 and gmn == gmx:
+                single[key] = gmx  # one non-NULL key
+            elif gnn == gnv:
+                single[key] = None  # SQL's pooled NULL group
+
+        # phase 2 — group/value payloads for the non-shortcut
+        # survivors only; predicate payloads only at the ordinals
+        # where some partial block needs that predicate decoded
+        need: dict[str, set[int]] = {group_col: set(),
+                                     value_col: set()}
+        for key, kind in cls.items():
+            if key in single:
+                continue
+            need[group_col].add(key[1])
+            need[value_col].add(key[1])
+            if kind != "partial":
+                continue
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes, or_data):
+                need.setdefault(c, set()).add(key[1])
+        return (info, cls, pred_cls, mem_codes, mem_full, or_data, sums,
+                single, need)
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from decimal import Decimal
 
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
+        if plan is None:
+            return _empty()
+        (info, cls, pred_cls, mem_codes, mem_full, or_data, sums, single,
+         need) = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        side = (
+            _read_dict_sidecar(path, file_sid, col=group_col,
+                               seg=seg)
+            if group_is_str
             else None
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                # phase 1 — one payload-free metadata read, inventory
-                # cross-checks, combined pruned/full/partial class
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
+        acc: dict[object, list] = {}
+        for key in sorted(cls):
+            nv_rows = info[group_col][key][0]
+            if key in single:
+                code = single[key]
+                if code is None:
+                    g = None
+                elif group_is_str:
+                    blob = None if side is None else side.get(
+                        (key[0], group_col, key[1])
                     )
-                if not cls:
-                    yield _empty()
-                    continue
-
-                # single-group shortcut: a full-matching block whose group
-                # zone map is a point (min == max, no NULL keys) — or whose
-                # keys are ALL NULL — belongs to exactly one group, so its
-                # value stats row (count, n_nulls, sum_val, zone map) IS
-                # its partial: neither payload decodes.  On group-clustered
-                # data (cluster_encode_table_files) that makes GROUP BY
-                # metadata-only away from cluster boundaries.
-                single: dict[tuple[str, int], int | None] = {}
-                for key, kind in cls.items():
-                    if kind != "full":
-                        continue
-                    if sums[value_col].get(key) is None:
-                        continue  # pre-sum_val generation
-                    gnv, gnn, gnr, gmn, gmx = info[group_col][key]
-                    if gnn == 0 and gmn == gmx:
-                        single[key] = gmx  # one non-NULL key
-                    elif gnn == gnv:
-                        single[key] = None  # SQL's pooled NULL group
-
-                # phase 2 — group/value payloads for the non-shortcut
-                # survivors only; predicate payloads only at the ordinals
-                # where some partial block needs that predicate decoded
-                need: dict[str, set[int]] = {group_col: set(),
-                                             value_col: set()}
-                for key, kind in cls.items():
-                    if key in single:
-                        continue
-                    need[group_col].add(key[1])
-                    need[value_col].add(key[1])
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(path, file_sid, col=group_col,
-                                       seg=seg)
-                    if group_is_str
-                    else None
-                )
-                acc: dict[object, list] = {}
-                for key in sorted(cls):
-                    nv_rows = info[group_col][key][0]
-                    if key in single:
-                        code = single[key]
-                        if code is None:
-                            g = None
-                        elif group_is_str:
-                            blob = None if side is None else side.get(
-                                (key[0], group_col, key[1])
-                            )
-                            if blob is None:
-                                raise ValueError(
-                                    f"column {group_col!r} is missing the "
-                                    f"dictionary for block {key[1]} of "
-                                    f"segment {key[0]} — corrupt dataset"
-                                )
-                            # a point zone map means one distinct valid
-                            # value: the block dictionary holds exactly it
-                            g = B.decode_strings_arrow(
-                                blob, symbols
-                            ).to_pylist()[code]
-                        else:
-                            g = code
-                        vnv, vnn, _, vmn, vmx = info[value_col][key]
-                        cur = acc.get(g)
-                        if cur is None:
-                            cur = acc[g] = [0, 0, 0, None, None]
-                        cur[0] += vnv
-                        nvalid = vnv - vnn
-                        if nvalid:
-                            cur[1] += nvalid
-                            cur[2] += sums[value_col][key]
-                            cur[3] = vmn if cur[3] is None \
-                                else min(cur[3], vmn)
-                            cur[4] = vmx if cur[4] is None \
-                                else max(cur[4], vmx)
-                        continue
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, key=key, nv=nv_rows, decoded=decoded):
-                        if c in decoded:
-                            return decoded[c]
-                        if (key[0], c, key[1]) not in blobs:
-                            raise ValueError(
-                                f"column {c!r} is missing block {key[1]} "
-                                f"of segment {key[0]} — corrupt dataset"
-                            )
-                        decoded[c] = B.decode_blocks_batch_nullable(
-                            [blobs[(key[0], c, key[1])]], np.int64,
-                            expected=[nv],
+                    if blob is None:
+                        raise ValueError(
+                            f"column {group_col!r} is missing the "
+                            f"dictionary for block {key[1]} of "
+                            f"segment {key[0]} — corrupt dataset"
                         )
-                        return decoded[c]
+                    # a point zone map means one distinct valid
+                    # value: the block dictionary holds exactly it
+                    g = B.decode_strings_arrow(
+                        blob, symbols
+                    ).to_pylist()[code]
+                else:
+                    g = code
+                vnv, vnn, _, vmn, vmx = info[value_col][key]
+                cur = acc.get(g)
+                if cur is None:
+                    cur = acc[g] = [0, 0, 0, None, None]
+                cur[0] += vnv
+                nvalid = vnv - vnn
+                if nvalid:
+                    cur[1] += nvalid
+                    cur[2] += sums[value_col][key]
+                    cur[3] = vmn if cur[3] is None \
+                        else min(cur[3], vmn)
+                    cur[4] = vmx if cur[4] is None \
+                        else max(cur[4], vmx)
+                continue
+            decoded: dict[str, tuple] = {}
 
-                    if cls[key] == "full":
-                        mask = np.ones(nv_rows, dtype=bool)
-                    else:
-                        mask = _pred_mask(
-                            key, nv_rows, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
-                        )
-                        if not mask.any():
-                            continue
-                    gv, _, gvalid = _dec(group_col)
-                    vv, _, vvalid = _dec(value_col)
-                    if group_is_str:
-                        blob = None if side is None else side.get(
-                            (key[0], group_col, key[1])
-                        )
-                        if blob is None and bool((mask & gvalid).any()):
-                            raise ValueError(
-                                f"column {group_col!r} is missing the "
-                                f"dictionary for block {key[1]} of segment "
-                                f"{key[0]} — corrupt dataset"
-                            )
-                        names = (
-                            []
-                            if blob is None
-                            else B.decode_strings_arrow(
-                                blob, symbols
-                            ).to_pylist()
-                        )
-                        name_of = names.__getitem__
-                    else:
-                        name_of = lambda k: k  # noqa: E731
-                    sel = mask & gvalid
-                    _group_seg_agg(
-                        gv[sel], vv[sel], vvalid[sel], acc, name_of
+            def _dec(c, key=key, nv=nv_rows, decoded=decoded):
+                if c in decoded:
+                    return decoded[c]
+                if (key[0], c, key[1]) not in blobs:
+                    raise ValueError(
+                        f"column {c!r} is missing block {key[1]} "
+                        f"of segment {key[0]} — corrupt dataset"
                     )
-                    nsel = mask & ~gvalid  # SQL: NULL keys form one group
-                    if nsel.any():
-                        _group_seg_agg(
-                            np.zeros(int(nsel.sum()), np.int64),
-                            vv[nsel], vvalid[nsel], acc,
-                            lambda _k: None,
-                        )
-                if not acc:
-                    yield _empty()
-                    continue
-                groups = sorted(
-                    acc, key=lambda g: (g is not None, g)
+                decoded[c] = B.decode_blocks_batch_nullable(
+                    [blobs[(key[0], c, key[1])]], np.int64,
+                    expected=[nv],
                 )
-                yield pd.DataFrame(
-                    {
-                        "g": pd.Series(
-                            groups,
-                            dtype=object if group_is_str else "Int64",
-                        ),
-                        "n_rows": pd.Series(
-                            [acc[g][0] for g in groups], dtype="int64"
-                        ),
-                        "n_vals": pd.Series(
-                            [acc[g][1] for g in groups], dtype="int64"
-                        ),
-                        "sum_val": pd.Series(
-                            [Decimal(acc[g][2]) for g in groups],
-                            dtype=object,
-                        ),
-                        "min_val": pd.Series(
-                            [acc[g][3] for g in groups], dtype="Int64"
-                        ),
-                        "max_val": pd.Series(
-                            [acc[g][4] for g in groups], dtype="Int64"
-                        ),
-                    }
-                )
+                return decoded[c]
 
-    return run_group_agg
+            if cls[key] == "full":
+                mask = np.ones(nv_rows, dtype=bool)
+            else:
+                mask = _pred_mask(
+                    key, nv_rows, pred_cls, int_preds, mem_preds,
+                    mem_codes, mem_full, _dec, or_nodes, or_data,
+                )
+                if not mask.any():
+                    continue
+            gv, _, gvalid = _dec(group_col)
+            vv, _, vvalid = _dec(value_col)
+            if group_is_str:
+                blob = None if side is None else side.get(
+                    (key[0], group_col, key[1])
+                )
+                if blob is None and bool((mask & gvalid).any()):
+                    raise ValueError(
+                        f"column {group_col!r} is missing the "
+                        f"dictionary for block {key[1]} of segment "
+                        f"{key[0]} — corrupt dataset"
+                    )
+                names = (
+                    []
+                    if blob is None
+                    else B.decode_strings_arrow(
+                        blob, symbols
+                    ).to_pylist()
+                )
+                name_of = names.__getitem__
+            else:
+                name_of = lambda k: k  # noqa: E731
+            sel = mask & gvalid
+            _group_seg_agg(
+                gv[sel], vv[sel], vvalid[sel], acc, name_of
+            )
+            nsel = mask & ~gvalid  # SQL: NULL keys form one group
+            if nsel.any():
+                _group_seg_agg(
+                    np.zeros(int(nsel.sum()), np.int64),
+                    vv[nsel], vvalid[nsel], acc,
+                    lambda _k: None,
+                )
+        if not acc:
+            return _empty()
+        groups = sorted(
+            acc, key=lambda g: (g is not None, g)
+        )
+        return pd.DataFrame(
+            {
+                "g": pd.Series(
+                    groups,
+                    dtype=object if group_is_str else "Int64",
+                ),
+                "n_rows": pd.Series(
+                    [acc[g][0] for g in groups], dtype="int64"
+                ),
+                "n_vals": pd.Series(
+                    [acc[g][1] for g in groups], dtype="int64"
+                ),
+                "sum_val": pd.Series(
+                    [Decimal(acc[g][2]) for g in groups],
+                    dtype=object,
+                ),
+                "min_val": pd.Series(
+                    [acc[g][3] for g in groups], dtype="Int64"
+                ),
+                "max_val": pd.Series(
+                    [acc[g][4] for g in groups], dtype="Int64"
+                ),
+            }
+        )
+
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
@@ -4671,8 +4802,6 @@ def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
     never exceed (block distinct) × (radix), so int64 cannot overflow at
     any ``rows_per_block``.  Aggregation reuses :func:`_group_seg_agg`
     with a tuple-naming lookup; one partial row per (file, key tuple)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*group_cols, value_col, *pred_cols]))
@@ -4696,228 +4825,223 @@ def _make_multi_group_agg_worker(value_col: str, group_cols: list[str],
         )
         return pd.DataFrame(cols)
 
-    def run_multi_group(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, sums = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        if not cls:
+            return None
+
+        # single-group shortcut (the single-key worker's, lifted
+        # to tuples): a full block where EVERY group column's zone
+        # map is a point (or is all-NULL) belongs to one group
+        # tuple — its value stats row is its partial, no payload
+        single: dict[tuple[str, int], bool] = {}
+        for key, kind in cls.items():
+            if kind != "full":
+                continue
+            if sums[value_col].get(key) is None:
+                continue
+            ok = True
+            for g in group_cols:
+                gnv, gnn, gnr, gmn, gmx = info[g][key]
+                if not (gnn == 0 and gmn == gmx) \
+                        and gnn != gnv:
+                    ok = False
+                    break
+            if ok:
+                single[key] = True
+
+        need: dict[str, set[int]] = {
+            c: set()
+            for c in dict.fromkeys([*group_cols, value_col])
+        }
+        for key, kind in cls.items():
+            if key in single:
+                continue
+            for c in dict.fromkeys([*group_cols, value_col]):
+                need[c].add(key[1])
+            if kind != "partial":
+                continue
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes, or_data):
+                need.setdefault(c, set()).add(key[1])
+        return (info, cls, pred_cls, mem_codes, mem_full, or_data, sums,
+                single, need)
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from decimal import Decimal
 
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+        if plan is None:
+            return _empty()
+        (info, cls, pred_cls, mem_codes, mem_full, or_data, sums, single,
+         need) = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        side = (
+            _read_dict_sidecar(path, file_sid, col=side_cols,
+                               seg=seg)
+            if side_cols
+            else {}
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, sums = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield _empty()
-                    continue
-
-                # single-group shortcut (the single-key worker's, lifted
-                # to tuples): a full block where EVERY group column's zone
-                # map is a point (or is all-NULL) belongs to one group
-                # tuple — its value stats row is its partial, no payload
-                single: dict[tuple[str, int], bool] = {}
-                for key, kind in cls.items():
-                    if kind != "full":
-                        continue
-                    if sums[value_col].get(key) is None:
-                        continue
-                    ok = True
-                    for g in group_cols:
-                        gnv, gnn, gnr, gmn, gmx = info[g][key]
-                        if not (gnn == 0 and gmn == gmx) \
-                                and gnn != gnv:
-                            ok = False
-                            break
-                    if ok:
-                        single[key] = True
-
-                need: dict[str, set[int]] = {
-                    c: set()
-                    for c in dict.fromkeys([*group_cols, value_col])
-                }
-                for key, kind in cls.items():
-                    if key in single:
-                        continue
-                    for c in dict.fromkeys([*group_cols, value_col]):
-                        need[c].add(key[1])
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(path, file_sid, col=side_cols,
-                                       seg=seg)
-                    if side_cols
-                    else {}
-                )
-                acc: dict[tuple, list] = {}
-                for key in sorted(cls):
-                    nv_rows = info[group_cols[0]][key][0]
-                    if key in single:
-                        parts = []
-                        for g in group_cols:
-                            gnv, gnn, _, _, gmx = info[g][key]
-                            if gnn == gnv:
-                                parts.append(None)
-                            elif g in str_groups:
-                                blob = side.get((key[0], g, key[1]))
-                                if blob is None:
-                                    raise ValueError(
-                                        f"column {g!r} is missing the "
-                                        f"dictionary for block {key[1]} "
-                                        f"of segment {key[0]} — corrupt "
-                                        "dataset"
-                                    )
-                                parts.append(
-                                    B.decode_strings_arrow(
-                                        blob, symbols
-                                    ).to_pylist()[gmx]
-                                )
-                            else:
-                                parts.append(gmx)
-                        gt = tuple(parts)
-                        vnv, vnn, _, vmn, vmx = info[value_col][key]
-                        cur = acc.get(gt)
-                        if cur is None:
-                            cur = acc[gt] = [0, 0, 0, None, None]
-                        cur[0] += vnv
-                        nvalid = vnv - vnn
-                        if nvalid:
-                            cur[1] += nvalid
-                            cur[2] += sums[value_col][key]
-                            cur[3] = vmn if cur[3] is None \
-                                else min(cur[3], vmn)
-                            cur[4] = vmx if cur[4] is None \
-                                else max(cur[4], vmx)
-                        continue
-                    decoded: dict[str, tuple] = {}
-
-                    def _dec(c, key=key, nv=nv_rows, decoded=decoded):
-                        if c in decoded:
-                            return decoded[c]
-                        if (key[0], c, key[1]) not in blobs:
+        acc: dict[tuple, list] = {}
+        for key in sorted(cls):
+            nv_rows = info[group_cols[0]][key][0]
+            if key in single:
+                parts = []
+                for g in group_cols:
+                    gnv, gnn, _, _, gmx = info[g][key]
+                    if gnn == gnv:
+                        parts.append(None)
+                    elif g in str_groups:
+                        blob = side.get((key[0], g, key[1]))
+                        if blob is None:
                             raise ValueError(
-                                f"column {c!r} is missing block {key[1]} "
-                                f"of segment {key[0]} — corrupt dataset"
+                                f"column {g!r} is missing the "
+                                f"dictionary for block {key[1]} "
+                                f"of segment {key[0]} — corrupt "
+                                "dataset"
                             )
-                        decoded[c] = B.decode_blocks_batch_nullable(
-                            [blobs[(key[0], c, key[1])]], np.int64,
-                            expected=[nv],
+                        parts.append(
+                            B.decode_strings_arrow(
+                                blob, symbols
+                            ).to_pylist()[gmx]
                         )
-                        return decoded[c]
-
-                    if cls[key] == "full":
-                        mask = np.ones(nv_rows, dtype=bool)
                     else:
-                        mask = _pred_mask(
-                            key, nv_rows, pred_cls, int_preds, mem_preds,
-                            mem_codes, mem_full, _dec, or_nodes, or_data,
-                        )
-                        if not mask.any():
-                            continue
-                    # per-column dense local ids (0 = NULL) + name slots
-                    comp: np.ndarray | None = None
-                    lookup: list[tuple] = []
-                    for g in group_cols:
-                        gv, _, gvalid = _dec(g)
-                        if g in str_groups:
-                            blob = side.get((key[0], g, key[1]))
-                            if blob is None and bool(gvalid.any()):
-                                raise ValueError(
-                                    f"column {g!r} is missing the "
-                                    f"dictionary for block {key[1]} of "
-                                    f"segment {key[0]} — corrupt dataset"
-                                )
-                            gnames = (
-                                []
-                                if blob is None
-                                else B.decode_strings_arrow(
-                                    blob, symbols
-                                ).to_pylist()
-                            )
-                            names_g = [None, *gnames]
-                            ids = np.where(gvalid, gv + 1, 0)
-                        else:
-                            uniq = np.unique(gv[gvalid])
-                            names_g = [None, *(int(u) for u in uniq)]
-                            ids = np.where(
-                                gvalid, np.searchsorted(uniq, gv) + 1, 0
-                            )
-                        radix = len(names_g)
-                        if comp is None:
-                            dense, inv = np.unique(
-                                ids, return_inverse=True
-                            )
-                            lookup = [(names_g[int(d)],) for d in dense]
-                            comp = inv.astype(np.int64)
-                        else:
-                            dense, inv = np.unique(
-                                comp * radix + ids, return_inverse=True
-                            )
-                            lookup = [
-                                lookup[int(d // radix)]
-                                + (names_g[int(d % radix)],)
-                                for d in dense
-                            ]
-                            comp = inv.astype(np.int64)
-                    vv, _, vvalid = _dec(value_col)
-                    _group_seg_agg(
-                        comp[mask], vv[mask], vvalid[mask], acc,
-                        lookup.__getitem__,
-                    )
-                if not acc:
-                    yield _empty()
-                    continue
-                groups = sorted(
-                    acc,
-                    key=lambda t: tuple(
-                        (v is not None, v) for v in t
-                    ),
-                )
-                cols = {
-                    g: pd.Series(
-                        [t[i] for t in groups],
-                        dtype=object if g in str_groups else "Int64",
-                    )
-                    for i, g in enumerate(group_cols)
-                }
-                cols.update(
-                    {
-                        "n_rows": pd.Series(
-                            [acc[t][0] for t in groups], dtype="int64"
-                        ),
-                        "n_vals": pd.Series(
-                            [acc[t][1] for t in groups], dtype="int64"
-                        ),
-                        "sum_val": pd.Series(
-                            [Decimal(acc[t][2]) for t in groups],
-                            dtype=object,
-                        ),
-                        "min_val": pd.Series(
-                            [acc[t][3] for t in groups], dtype="Int64"
-                        ),
-                        "max_val": pd.Series(
-                            [acc[t][4] for t in groups], dtype="Int64"
-                        ),
-                    }
-                )
-                yield pd.DataFrame(cols)
+                        parts.append(gmx)
+                gt = tuple(parts)
+                vnv, vnn, _, vmn, vmx = info[value_col][key]
+                cur = acc.get(gt)
+                if cur is None:
+                    cur = acc[gt] = [0, 0, 0, None, None]
+                cur[0] += vnv
+                nvalid = vnv - vnn
+                if nvalid:
+                    cur[1] += nvalid
+                    cur[2] += sums[value_col][key]
+                    cur[3] = vmn if cur[3] is None \
+                        else min(cur[3], vmn)
+                    cur[4] = vmx if cur[4] is None \
+                        else max(cur[4], vmx)
+                continue
+            decoded: dict[str, tuple] = {}
 
-    return run_multi_group
+            def _dec(c, key=key, nv=nv_rows, decoded=decoded):
+                if c in decoded:
+                    return decoded[c]
+                if (key[0], c, key[1]) not in blobs:
+                    raise ValueError(
+                        f"column {c!r} is missing block {key[1]} "
+                        f"of segment {key[0]} — corrupt dataset"
+                    )
+                decoded[c] = B.decode_blocks_batch_nullable(
+                    [blobs[(key[0], c, key[1])]], np.int64,
+                    expected=[nv],
+                )
+                return decoded[c]
+
+            if cls[key] == "full":
+                mask = np.ones(nv_rows, dtype=bool)
+            else:
+                mask = _pred_mask(
+                    key, nv_rows, pred_cls, int_preds, mem_preds,
+                    mem_codes, mem_full, _dec, or_nodes, or_data,
+                )
+                if not mask.any():
+                    continue
+            # per-column dense local ids (0 = NULL) + name slots
+            comp: np.ndarray | None = None
+            lookup: list[tuple] = []
+            for g in group_cols:
+                gv, _, gvalid = _dec(g)
+                if g in str_groups:
+                    blob = side.get((key[0], g, key[1]))
+                    if blob is None and bool(gvalid.any()):
+                        raise ValueError(
+                            f"column {g!r} is missing the "
+                            f"dictionary for block {key[1]} of "
+                            f"segment {key[0]} — corrupt dataset"
+                        )
+                    gnames = (
+                        []
+                        if blob is None
+                        else B.decode_strings_arrow(
+                            blob, symbols
+                        ).to_pylist()
+                    )
+                    names_g = [None, *gnames]
+                    ids = np.where(gvalid, gv + 1, 0)
+                else:
+                    uniq = np.unique(gv[gvalid])
+                    names_g = [None, *(int(u) for u in uniq)]
+                    ids = np.where(
+                        gvalid, np.searchsorted(uniq, gv) + 1, 0
+                    )
+                radix = len(names_g)
+                if comp is None:
+                    dense, inv = np.unique(
+                        ids, return_inverse=True
+                    )
+                    lookup = [(names_g[int(d)],) for d in dense]
+                    comp = inv.astype(np.int64)
+                else:
+                    dense, inv = np.unique(
+                        comp * radix + ids, return_inverse=True
+                    )
+                    lookup = [
+                        lookup[int(d // radix)]
+                        + (names_g[int(d % radix)],)
+                        for d in dense
+                    ]
+                    comp = inv.astype(np.int64)
+            vv, _, vvalid = _dec(value_col)
+            _group_seg_agg(
+                comp[mask], vv[mask], vvalid[mask], acc,
+                lookup.__getitem__,
+            )
+        if not acc:
+            return _empty()
+        groups = sorted(
+            acc,
+            key=lambda t: tuple(
+                (v is not None, v) for v in t
+            ),
+        )
+        cols = {
+            g: pd.Series(
+                [t[i] for t in groups],
+                dtype=object if g in str_groups else "Int64",
+            )
+            for i, g in enumerate(group_cols)
+        }
+        cols.update(
+            {
+                "n_rows": pd.Series(
+                    [acc[t][0] for t in groups], dtype="int64"
+                ),
+                "n_vals": pd.Series(
+                    [acc[t][1] for t in groups], dtype="int64"
+                ),
+                "sum_val": pd.Series(
+                    [Decimal(acc[t][2]) for t in groups],
+                    dtype=object,
+                ),
+                "min_val": pd.Series(
+                    [acc[t][3] for t in groups], dtype="Int64"
+                ),
+                "max_val": pd.Series(
+                    [acc[t][4] for t in groups], dtype="Int64"
+                ),
+            }
+        )
+        return pd.DataFrame(cols)
+
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def agg_table_files_by(
@@ -5011,28 +5135,31 @@ def agg_table_files_by(
         out_schema = g_schema + ", " + AGG_PARTIAL_SCHEMA
         if tasks.empty:
             return spark.createDataFrame([], out_schema)
-        partials = _spark_tasks(spark, tasks).mapInPandas(
+        def combine_multi(partials):
+            for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
+                partials = partials.withColumn(
+                    g, _group_key_norm_expr(schema, g)
+                )
+            return partials.groupBy(*group_cols).agg(
+                F.sum("n_rows").alias("n_rows"),
+                F.sum("n_vals").alias("n_vals"),
+                F.sum("sum_val").alias("_sum"),
+                F.min("min_val").alias("min_val"),
+                F.max("max_val").alias("max_val"),
+            ).select(
+                *[_typed_out_expr(schema, g) for g in group_cols],
+                F.col("n_rows").cast("bigint").alias("n_rows"),
+                F.col("n_vals").cast("bigint").alias("n_vals"),
+                *_group_agg_out_cols(schema, value_col),
+            )
+
+        return _dispatch(
+            spark, tasks,
             _make_multi_group_agg_worker(
                 value_col, group_cols, str_groups, specs,
                 _symbols_hex(enc_dir),
             ),
-            out_schema,
-        )
-        for g in group_cols:  # SQL key merge: -0.0 == 0.0, NaNs pool
-            partials = partials.withColumn(
-                g, _group_key_norm_expr(schema, g)
-            )
-        return partials.groupBy(*group_cols).agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_vals").alias("n_vals"),
-            F.sum("sum_val").alias("_sum"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        ).select(
-            *[_typed_out_expr(schema, g) for g in group_cols],
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_vals").cast("bigint").alias("n_vals"),
-            *_group_agg_out_cols(schema, value_col),
+            out_schema, combine=combine_multi,
         )
 
     g_type = "string" if group_is_str else "bigint"
@@ -5042,28 +5169,48 @@ def agg_table_files_by(
     )
     if tasks.empty:
         return spark.createDataFrame([], out_schema)
-    partials = _spark_tasks(spark, tasks).mapInPandas(
+    def combine(partials):
+        partials = partials.withColumn(
+            "g", _group_key_norm_expr(schema, group_col, src="g")
+        )  # SQL key merge: -0.0 == 0.0, NaNs pool into one group
+        return partials.groupBy("g").agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_vals").alias("n_vals"),
+            F.sum("sum_val").alias("_sum"),
+            F.min("min_val").alias("min_val"),
+            F.max("max_val").alias("max_val"),
+        ).select(
+            _typed_out_expr(schema, group_col, src="g").alias(group_col),
+            F.col("n_rows").cast("bigint").alias("n_rows"),
+            F.col("n_vals").cast("bigint").alias("n_vals"),
+            *_group_agg_out_cols(schema, value_col),
+        )
+
+    return _dispatch(
+        spark, tasks,
         _make_group_agg_worker(
             value_col, group_col, group_is_str, specs,
             _symbols_hex(enc_dir),
         ),
-        f"g {g_type}, " + AGG_PARTIAL_SCHEMA,
+        f"g {g_type}, " + AGG_PARTIAL_SCHEMA, combine=combine,
     )
-    partials = partials.withColumn(
-        "g", _group_key_norm_expr(schema, group_col, src="g")
-    )  # SQL key merge: -0.0 == 0.0, NaNs pool into one group
-    return partials.groupBy("g").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_vals").alias("n_vals"),
-        F.sum("sum_val").alias("_sum"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-    ).select(
-        _typed_out_expr(schema, group_col, src="g").alias(group_col),
-        F.col("n_rows").cast("bigint").alias("n_rows"),
-        F.col("n_vals").cast("bigint").alias("n_vals"),
-        *_group_agg_out_cols(schema, value_col),
-    )
+
+
+def _has_nulls(path: str, col: str, seg: str | None) -> bool:
+    """Whether any block of ``col`` (in segment ``seg``) records a NULL."""
+    meta = _read_filtered(path, ["n_nulls"], col=col, seg=seg)
+    return bool((meta.column("n_nulls").to_numpy() > 0).any())
+
+
+def _int_set_frame(col: str, vals: np.ndarray,
+                   has_null: bool) -> pd.DataFrame:
+    """One int column of distinct values, plus the one NULL row SQL
+    DISTINCT keeps when ``has_null``."""
+    mask = np.zeros(vals.size + (1 if has_null else 0), bool)
+    if has_null:
+        vals = np.concatenate([vals, np.zeros(1, np.int64)])
+        mask[-1] = True
+    return pd.DataFrame({col: pd.arrays.IntegerArray(vals, mask)})
 
 
 def _make_distinct_worker(col: str, symbols_hex: tuple[str, ...] | None):
@@ -5071,50 +5218,26 @@ def _make_distinct_worker(col: str, symbols_hex: tuple[str, ...] | None):
     dictionary sidecars (each a block's sorted-distinct VALID values), union
     them, and append one NULL row iff any block's metadata records
     ``n_nulls > 0`` — no payload column is ever read."""
-    from rlv.util import tune_malloc
+    symbols = _symbol_list(symbols_hex)
 
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
+    def phase1(path, file_sid, seg) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                vals: set[bytes] = set()
-                for blob in _read_dict_sidecar(
-                    path, file_sid, col=col, seg=seg
-                ).values():
-                    vals.update(
-                        B.decode_strings_arrow(blob, symbols).to_pylist()
-                    )
-                nfilters: list = [("col_name", "=", col),
-                                  ("n_nulls", ">", 0)]
-                if seg is not None:
-                    nfilters.append(("split_seq", "=", seg))
-                nmeta = pq.read_table(
-                    path,
-                    columns=["block_idx"],
-                    filters=nfilters,
-                )
-                out: list[str | None] = [
-                    v.decode("utf-8") for v in sorted(vals)
-                ]
-                if len(nmeta) > 0:
-                    out.append(None)  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame({col: pd.Series(out, dtype=object)})
+        vals: set[bytes] = set()
+        for blob in _read_dict_sidecar(
+            path, file_sid, col=col, seg=seg
+        ).values():
+            vals.update(
+                B.decode_strings_arrow(blob, symbols).to_pylist()
+            )
+        out: list[str | None] = [
+            v.decode("utf-8") for v in sorted(vals)
+        ]
+        if _has_nulls(path, col, seg):
+            out.append(None)  # SQL DISTINCT keeps one NULL row
+        return pd.DataFrame({col: pd.Series(out, dtype=object)})
 
-    return run_distinct
+    return _TaskOp(_planned_frame, phase1)
 
 
 def _make_idx_distinct_worker(col: str,
@@ -5124,59 +5247,30 @@ def _make_idx_distinct_worker(col: str,
     exact distinct set unions the (small) sidecars — ZERO payload bytes,
     the same format-beats-raw shape string DISTINCT gets — with the NULL
     row from block metadata."""
-    from rlv.util import tune_malloc
+    symbols = _symbol_list(symbols_hex)
 
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
+    def phase1(path, file_sid, seg) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                keys: set[bytes] = set()
-                for blob in _read_dict_sidecar(
-                    path, file_sid, col=col, seg=seg
-                ).values():
-                    keys.update(
-                        B.decode_strings_arrow(blob, symbols).to_pylist()
-                    )
-                if keys:
-                    vals = (
-                        np.frombuffer(b"".join(sorted(keys)), ">u8")
-                        .astype(np.uint64)
-                        .view(np.int64)
-                        ^ np.int64(-(2 ** 63))
-                    )
-                else:
-                    vals = np.empty(0, np.int64)
-                nfilters: list = [("col_name", "=", col),
-                                  ("n_nulls", ">", 0)]
-                if seg is not None:
-                    nfilters.append(("split_seq", "=", seg))
-                has_null = len(
-                    pq.read_table(path, columns=["block_idx"],
-                                  filters=nfilters)
-                ) > 0
-                mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-                if has_null:
-                    vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                    mask[-1] = True  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame(
-                    {col: pd.arrays.IntegerArray(vals, mask)}
-                )
+        keys: set[bytes] = set()
+        for blob in _read_dict_sidecar(
+            path, file_sid, col=col, seg=seg
+        ).values():
+            keys.update(
+                B.decode_strings_arrow(blob, symbols).to_pylist()
+            )
+        if keys:
+            vals = (
+                np.frombuffer(b"".join(sorted(keys)), ">u8")
+                .astype(np.uint64)
+                .view(np.int64)
+                ^ np.int64(-(2 ** 63))
+            )
+        else:
+            vals = np.empty(0, np.int64)
+        return _int_set_frame(col, vals, _has_nulls(path, col, seg))
 
-    return run_distinct
+    return _TaskOp(_planned_frame, phase1)
 
 
 def _make_int_distinct_worker(col: str):
@@ -5184,48 +5278,29 @@ def _make_int_distinct_worker(col: str):
     block's :func:`rlv.blocks.distinct_block_values` (RLE uniques its run
     values without expanding rows; DICT reads only its dictionary plane) and
     append one NULL row iff any block records ``n_nulls > 0``."""
-    from rlv.util import tune_malloc
 
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    def phase1(path, file_sid, seg):
+        meta = _read_filtered(path, ["n_values", "n_nulls"], col=col,
+                              seg=seg)
+        return (int(meta.column("n_values").to_numpy().sum()),
+                bool((meta.column("n_nulls").to_numpy() > 0).any()))
 
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                seg = _task_seg(row)
-                ifilters: list = [("col_name", "=", col)]
-                if seg is not None:
-                    ifilters.append(("split_seq", "=", seg))
-                btbl = pq.read_table(
-                    row["file"],
-                    columns=["n_nulls", "block"],
-                    filters=ifilters,
-                )
-                parts = [
-                    B.distinct_block_values(blob)
-                    for blob in btbl.column("block").to_pylist()
-                ]
-                vals = (
-                    np.unique(np.concatenate(parts))
-                    if parts
-                    else np.empty(0, np.int64)
-                )
-                has_null = bool(
-                    (btbl.column("n_nulls").to_numpy() > 0).any()
-                )
-                mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-                if has_null:
-                    vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                    mask[-1] = True  # SQL DISTINCT keeps one NULL row
-                yield pd.DataFrame(
-                    {col: pd.arrays.IntegerArray(vals, mask)}
-                )
+        btbl = _read_filtered(path, ["block"], col=col, seg=seg)
+        parts = [
+            B.distinct_block_values(blob)
+            for blob in btbl.column("block").to_pylist()
+        ]
+        vals = (
+            np.unique(np.concatenate(parts))
+            if parts
+            else np.empty(0, np.int64)
+        )
+        return _int_set_frame(col, vals, plan[1])
 
-    return run_distinct
+    return _TaskOp(finish, phase1, lambda plan: plan[0])
 
 
 def _make_distinct_where_worker(col: str, is_str: bool, preds: list[dict],
@@ -5235,151 +5310,138 @@ def _make_distinct_where_worker(col: str, is_str: bool, preds: list[dict],
     dictionary (string) / codec-level distinct (int) plus the NULL row when
     they hold NULLs; PARTIAL blocks decode only the non-full predicates,
     mask, and contribute the matched rows' values."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([col, *pred_cols]))
 
-    def run_distinct(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def _frame(svals: set, iparts: list, has_null: bool):
+        if is_str:
+            out: list = [v.decode("utf-8") for v in sorted(svals)]
+            if has_null:
+                out.append(None)  # SQL DISTINCT keeps one NULL row
+            return pd.DataFrame({col: pd.Series(out, dtype=object)})
+        vals = (
+            np.unique(np.concatenate(iparts))
+            if iparts
+            else np.empty(0, np.int64)
+        )
+        return _int_set_frame(col, vals, has_null)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, _ = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        if not cls:
+            return None
+        # payload need: int distinct reads the column everywhere it
+        # survives (codec-level distinct), string distinct only at
+        # partial blocks (full blocks ride the sidecar); predicate
+        # columns only where that predicate is not full
+        need: dict[str, set[int]] = {}
+        if not is_str:
+            need[col] = {bi for _, bi in cls}
+        else:
+            part = {
+                bi for (_, bi), kk in cls.items() if kk == "partial"
+            }
+            if part:
+                need[col] = part
+        for key, kind in cls.items():
+            if kind != "partial":
+                continue
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes, or_data):
+                need.setdefault(c, set()).add(key[1])
+        return info, cls, pred_cls, mem_codes, mem_full, or_data, need
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         import pyarrow as pa
 
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-
-        def _frame(svals: set, iparts: list, has_null: bool):
-            if is_str:
-                out: list = [v.decode("utf-8") for v in sorted(svals)]
-                if has_null:
-                    out.append(None)  # SQL DISTINCT keeps one NULL row
-                return pd.DataFrame({col: pd.Series(out, dtype=object)})
-            vals = (
-                np.unique(np.concatenate(iparts))
-                if iparts
-                else np.empty(0, np.int64)
+        if plan is None:
+            return _frame(set(), [], False)
+        info, cls, pred_cls, mem_codes, mem_full, or_data, need = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        side = (
+            _read_dict_sidecar(
+                path, file_sid, col=col,
+                block_idx=sorted({bi for _, bi in cls}),
+                seg=seg,
             )
-            mask = np.zeros(vals.size + (1 if has_null else 0), bool)
-            if has_null:
-                vals = np.concatenate([vals, np.zeros(1, np.int64)])
-                mask[-1] = True
-            return pd.DataFrame({col: pd.arrays.IntegerArray(vals, mask)})
-
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
+            if is_str
+            else {}
+        )
+        svals: set[bytes] = set()
+        iparts: list[np.ndarray] = []
+        has_null = False
+        for key in sorted(cls):
+            seq, bi = key
+            nv, nn = info[col][key][0], info[col][key][1]
+            if cls[key] == "full":
+                if nn > 0:
+                    has_null = True
+                if is_str:
+                    blob = side.get((seq, col, bi))
+                    if blob is None:
+                        if nv - nn > 0:
+                            raise ValueError(
+                                f"column {col!r} is missing the "
+                                f"dictionary for block {bi} of "
+                                f"segment {seq} — corrupt dataset"
+                            )
+                        continue  # all-NULL block: NULL row only
+                    svals.update(
+                        B.decode_strings_arrow(
+                            blob, symbols
+                        ).to_pylist()
                     )
-                if not cls:
-                    yield _frame(set(), [], False)
-                    continue
-                # payload need: int distinct reads the column everywhere it
-                # survives (codec-level distinct), string distinct only at
-                # partial blocks (full blocks ride the sidecar); predicate
-                # columns only where that predicate is not full
-                need: dict[str, set[int]] = {}
-                if not is_str:
-                    need[col] = {bi for _, bi in cls}
                 else:
-                    part = {
-                        bi for (_, bi), kk in cls.items() if kk == "partial"
-                    }
-                    if part:
-                        need[col] = part
-                for key, kind in cls.items():
-                    if kind != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                side = (
-                    _read_dict_sidecar(
-                        path, file_sid, col=col,
-                        block_idx=sorted({bi for _, bi in cls}),
-                        seg=seg,
+                    iparts.append(
+                        B.distinct_block_values(
+                            blobs[(seq, col, bi)]
+                        )
                     )
-                    if is_str
-                    else {}
+                continue
+            decoded: dict[str, tuple] = {}
+
+            def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
+                if c not in decoded:
+                    decoded[c] = B.decode_blocks_batch_nullable(
+                        [blobs[(seq, c, bi)]], np.int64,
+                        expected=[nv],
+                    )
+                return decoded[c]
+
+            mask = _pred_mask(
+                key, nv, pred_cls, int_preds, mem_preds,
+                mem_codes, mem_full, _dec, or_nodes, or_data,
+            )
+            if not mask.any():
+                continue
+            cv, _, cvalid = _dec(col)
+            if bool((mask & ~cvalid).any()):
+                has_null = True
+            sel = mask & cvalid
+            if not sel.any():
+                continue
+            if is_str:
+                codes = np.unique(cv[sel])
+                uniq = B.decode_strings_arrow(
+                    side[(seq, col, bi)], symbols
                 )
-                svals: set[bytes] = set()
-                iparts: list[np.ndarray] = []
-                has_null = False
-                for key in sorted(cls):
-                    seq, bi = key
-                    nv, nn = info[col][key][0], info[col][key][1]
-                    if cls[key] == "full":
-                        if nn > 0:
-                            has_null = True
-                        if is_str:
-                            blob = side.get((seq, col, bi))
-                            if blob is None:
-                                if nv - nn > 0:
-                                    raise ValueError(
-                                        f"column {col!r} is missing the "
-                                        f"dictionary for block {bi} of "
-                                        f"segment {seq} — corrupt dataset"
-                                    )
-                                continue  # all-NULL block: NULL row only
-                            svals.update(
-                                B.decode_strings_arrow(
-                                    blob, symbols
-                                ).to_pylist()
-                            )
-                        else:
-                            iparts.append(
-                                B.distinct_block_values(
-                                    blobs[(seq, col, bi)]
-                                )
-                            )
-                        continue
-                    decoded: dict[str, tuple] = {}
+                svals.update(
+                    uniq.take(pa.array(codes)).to_pylist()
+                )
+            else:
+                iparts.append(np.unique(cv[sel]))
+        return _frame(svals, iparts, has_null)
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    if not mask.any():
-                        continue
-                    cv, _, cvalid = _dec(col)
-                    if bool((mask & ~cvalid).any()):
-                        has_null = True
-                    sel = mask & cvalid
-                    if not sel.any():
-                        continue
-                    if is_str:
-                        codes = np.unique(cv[sel])
-                        uniq = B.decode_strings_arrow(
-                            side[(seq, col, bi)], symbols
-                        )
-                        svals.update(
-                            uniq.take(pa.array(codes)).to_pylist()
-                        )
-                    else:
-                        iparts.append(np.unique(cv[sel]))
-                yield _frame(svals, iparts, has_null)
-
-    return run_distinct
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
@@ -5436,13 +5498,12 @@ def distinct_table_files(spark: SparkSession, enc_dir: str, col: str,
     if tasks.empty:
         out = spark.createDataFrame([], out_schema)
     else:
-        out = _spark_tasks(spark, tasks).mapInPandas(
-            worker, out_schema
-        ).withColumn(
-            col, _group_key_norm_expr(schema, col)
-        ).distinct()  # SQL DISTINCT merges -0.0/0.0 and all NaNs
-    from pyspark.sql import functions as F
-
+        out = _dispatch(
+            spark, tasks, worker, out_schema,
+            combine=lambda parts: parts.withColumn(
+                col, _group_key_norm_expr(schema, col)
+            ).distinct(),  # SQL DISTINCT merges -0.0/0.0 and all NaNs
+        )
     return out.select(_typed_out_expr(schema, col))
 
 
@@ -5461,88 +5522,75 @@ def _make_explain_worker(preds: list[dict], read_cols: list[str],
     phase 2 WOULD read: per-class block/row counts and the exact sum of
     surviving blocks' ``enc_bytes`` across the columns the scan fetches
     (predicate + projected)."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*pred_cols, *read_cols]))
 
-    def run_explain(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, _, _, _, ebytes, _ = \
-                    _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols, with_enc_bytes=True,
-                    )
-                # mirror the scan's payload planner: a pred that
-                # full-matches EVERY surviving key never reads its column
-                # (unless projected or referenced by an OR leaf)
-                surv_keys = set(cls)
-                needed = set(read_cols) | {
-                    atom["col"] for node in or_nodes for leaf in node
-                    for atom in _leaf_atoms(leaf)
-                }
-                leaf_preds = [*int_preds, *mem_preds]
-                for i, p in enumerate(leaf_preds):
-                    if p.get("mask_free"):
-                        continue  # classification-only: never read
-                    if not all(
-                        pred_cls[i].get(k) == "full" for k in surv_keys
-                    ) or not surv_keys:
-                        needed.add(p["col"])
-                billed = [c for c in all_cols if c in needed]
-                n_full = n_part = rows_surv = rows_total = 0
-                payload = 0
-                for key in keys:
-                    nv = info[all_cols[0]][key][0]
-                    rows_total += nv
-                    kind = cls.get(key)
-                    if kind is None:
-                        continue
-                    if kind == "full":
-                        n_full += 1
-                    else:
-                        n_part += 1
-                    rows_surv += nv
-                    payload += sum(
-                        ebytes[c].get(key, 0) for c in billed
-                    )
-                yield pd.DataFrame(
-                    {
-                        "files": pd.Series([1], dtype="int64"),
-                        "blocks_total": pd.Series([len(keys)],
-                                                  dtype="int64"),
-                        "blocks_pruned": pd.Series(
-                            [len(keys) - n_full - n_part], dtype="int64"
-                        ),
-                        "blocks_full": pd.Series([n_full], dtype="int64"),
-                        "blocks_partial": pd.Series([n_part],
-                                                    dtype="int64"),
-                        "rows_total": pd.Series([rows_total],
-                                                dtype="int64"),
-                        "rows_pruned": pd.Series(
-                            [rows_total - rows_surv], dtype="int64"
-                        ),
-                        "rows_surviving": pd.Series([rows_surv],
-                                                    dtype="int64"),
-                        "payload_bytes": pd.Series([payload],
-                                                   dtype="int64"),
-                    }
-                )
+    symbols = _symbol_list(symbols_hex)
 
-    return run_explain
+    def phase1(path, file_sid, seg) -> pd.DataFrame:
+        info, keys, cls, pred_cls, _, _, _, ebytes, _ = \
+            _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols, with_enc_bytes=True,
+            )
+        # mirror the scan's payload planner: a pred that
+        # full-matches EVERY surviving key never reads its column
+        # (unless projected or referenced by an OR leaf)
+        surv_keys = set(cls)
+        needed = set(read_cols) | {
+            atom["col"] for node in or_nodes for leaf in node
+            for atom in _leaf_atoms(leaf)
+        }
+        leaf_preds = [*int_preds, *mem_preds]
+        for i, p in enumerate(leaf_preds):
+            if p.get("mask_free"):
+                continue  # classification-only: never read
+            if not all(
+                pred_cls[i].get(k) == "full" for k in surv_keys
+            ) or not surv_keys:
+                needed.add(p["col"])
+        billed = [c for c in all_cols if c in needed]
+        n_full = n_part = rows_surv = rows_total = 0
+        payload = 0
+        for key in keys:
+            nv = info[all_cols[0]][key][0]
+            rows_total += nv
+            kind = cls.get(key)
+            if kind is None:
+                continue
+            if kind == "full":
+                n_full += 1
+            else:
+                n_part += 1
+            rows_surv += nv
+            payload += sum(
+                ebytes[c].get(key, 0) for c in billed
+            )
+        return pd.DataFrame(
+            {
+                "files": pd.Series([1], dtype="int64"),
+                "blocks_total": pd.Series([len(keys)],
+                                          dtype="int64"),
+                "blocks_pruned": pd.Series(
+                    [len(keys) - n_full - n_part], dtype="int64"
+                ),
+                "blocks_full": pd.Series([n_full], dtype="int64"),
+                "blocks_partial": pd.Series([n_part],
+                                            dtype="int64"),
+                "rows_total": pd.Series([rows_total],
+                                        dtype="int64"),
+                "rows_pruned": pd.Series(
+                    [rows_total - rows_surv], dtype="int64"
+                ),
+                "rows_surviving": pd.Series([rows_surv],
+                                            dtype="int64"),
+                "payload_bytes": pd.Series([payload],
+                                           dtype="int64"),
+            }
+        )
+
+    return _TaskOp(_planned_frame, phase1)
 
 
 def _make_agg_explain_worker(value_cols: list[str], preds: list[dict],
@@ -5553,77 +5601,64 @@ def _make_agg_explain_worker(value_cols: list[str], preds: list[dict],
     (zero payload), so the bill is value payload at partial keys (plus
     full keys of pre-``sum_val`` files) and predicate payload at partial
     keys where that predicate is not full."""
-    from rlv.util import tune_malloc
-
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([*pred_cols, *value_cols]))
 
-    def run_explain(
-        pdf_iter: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, _, _, or_data, ebytes, sums = \
-                    _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols, with_enc_bytes=True,
-                    )
-                n_full = n_part = n_meta = rows_total = 0
-                payload = 0
-                for key in keys:
-                    nv = info[all_cols[0]][key][0]
-                    rows_total += nv
-                    kind = cls.get(key)
-                    if kind is None:
-                        continue
-                    if kind == "full":
-                        n_full += 1
-                        served = True
-                        for vc in value_cols:
-                            if sums[vc].get(key) is None:
-                                payload += ebytes[vc].get(key, 0)
-                                served = False
-                        if served:
-                            n_meta += 1
-                        continue
-                    n_part += 1
-                    for vc in value_cols:
-                        payload += ebytes[vc].get(key, 0)
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes,
-                                             or_data):
-                        if c not in value_cols:
-                            payload += ebytes[c].get(key, 0)
-                yield pd.DataFrame(
-                    {
-                        "blocks_total": pd.Series([len(keys)],
-                                                  dtype="int64"),
-                        "blocks_pruned": pd.Series(
-                            [len(keys) - n_full - n_part], dtype="int64"
-                        ),
-                        "blocks_full": pd.Series([n_full], dtype="int64"),
-                        "blocks_partial": pd.Series([n_part],
-                                                    dtype="int64"),
-                        "blocks_meta_served": pd.Series([n_meta],
-                                                        dtype="int64"),
-                        "rows_total": pd.Series([rows_total],
-                                                dtype="int64"),
-                        "payload_bytes": pd.Series([payload],
-                                                   dtype="int64"),
-                    }
-                )
+    symbols = _symbol_list(symbols_hex)
 
-    return run_explain
+    def phase1(path, file_sid, seg) -> pd.DataFrame:
+        info, keys, cls, pred_cls, _, _, or_data, ebytes, sums = \
+            _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols, with_enc_bytes=True,
+            )
+        n_full = n_part = n_meta = rows_total = 0
+        payload = 0
+        for key in keys:
+            nv = info[all_cols[0]][key][0]
+            rows_total += nv
+            kind = cls.get(key)
+            if kind is None:
+                continue
+            if kind == "full":
+                n_full += 1
+                served = True
+                for vc in value_cols:
+                    if sums[vc].get(key) is None:
+                        payload += ebytes[vc].get(key, 0)
+                        served = False
+                if served:
+                    n_meta += 1
+                continue
+            n_part += 1
+            for vc in value_cols:
+                payload += ebytes[vc].get(key, 0)
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes,
+                                     or_data):
+                if c not in value_cols:
+                    payload += ebytes[c].get(key, 0)
+        return pd.DataFrame(
+            {
+                "blocks_total": pd.Series([len(keys)],
+                                          dtype="int64"),
+                "blocks_pruned": pd.Series(
+                    [len(keys) - n_full - n_part], dtype="int64"
+                ),
+                "blocks_full": pd.Series([n_full], dtype="int64"),
+                "blocks_partial": pd.Series([n_part],
+                                            dtype="int64"),
+                "blocks_meta_served": pd.Series([n_meta],
+                                                dtype="int64"),
+                "rows_total": pd.Series([rows_total],
+                                        dtype="int64"),
+                "payload_bytes": pd.Series([payload],
+                                           dtype="int64"),
+            }
+        )
+
+    return _TaskOp(_planned_frame, phase1)
 
 
 AGG_EXPLAIN_SCHEMA = (
@@ -5656,27 +5691,30 @@ def explain_agg_table_files(
     worker = _make_agg_explain_worker(
         value_cols, specs, symbols_hex=_symbols_hex(enc_dir)
     )
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
+    return _explain_totals(
+        spark, _query_tasks(enc_dir), worker, AGG_EXPLAIN_SCHEMA,
+        ["blocks_total", "blocks_pruned", "blocks_full", "blocks_partial",
+         "blocks_meta_served", "rows_total", "payload_bytes"],
+    )
 
-    if tasks.empty:
-        parts = spark.createDataFrame([], AGG_EXPLAIN_SCHEMA)
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, AGG_EXPLAIN_SCHEMA
-        )
-    sum_cols = ["blocks_total", "blocks_pruned", "blocks_full",
-                "blocks_partial", "blocks_meta_served", "rows_total",
-                "payload_bytes"]
-    return parts.agg(
-        *[
-            F.coalesce(F.sum(c), F.lit(0)).cast("bigint").alias(c)
-            for c in sum_cols
-        ]
-    ).select(
-        F.lit(int(tasks["file"].nunique()) if not tasks.empty else 0)
-        .cast("bigint").alias("files"),
-        *[F.col(c) for c in sum_cols],
+
+def _explain_totals(spark: SparkSession, tasks: pd.DataFrame, worker,
+                    part_schema: str, sum_cols: list[str]):
+    """One EXPLAIN row: ``files`` then the per-task rows' ``sum_cols``
+    totals.  ``files`` counts LIVE FILES (planner-known), not tasks — a
+    compacted bin fans out to several segment tasks but is still one
+    file."""
+    files = int(tasks["file"].nunique()) if not tasks.empty else 0
+    return _dispatch(
+        spark, tasks, worker, part_schema,
+        fold=lambda parts: _local_frame(
+            spark,
+            pd.DataFrame({
+                "files": [files],
+                **{c: [_summed(parts, c)] for c in sum_cols},
+            }),
+            ", ".join(f"{c} bigint" for c in ["files", *sum_cols]),
+        ),
     )
 
 
@@ -5715,30 +5753,10 @@ def explain_scan_table_files(
     worker = _make_explain_worker(
         specs, out_names, symbols_hex=_symbols_hex(enc_dir),
     )
-    tasks = _query_tasks(enc_dir)
-    from pyspark.sql import functions as F
-
-    if tasks.empty:
-        parts = spark.createDataFrame([], EXPLAIN_SCHEMA)
-    else:
-        parts = _spark_tasks(spark, tasks).mapInPandas(
-            worker, EXPLAIN_SCHEMA
-        )
-    # `files` counts LIVE FILES (planner-known), not tasks — a compacted
-    # bin fans out to several segment tasks but is still one file
-    sum_cols = [
-        "blocks_total", "blocks_pruned", "blocks_full",
-        "blocks_partial", "rows_total", "rows_pruned",
-        "rows_surviving", "payload_bytes",
-    ]
-    return parts.agg(
-        *[
-            F.coalesce(F.sum(c), F.lit(0)).cast("bigint").alias(c)
-            for c in sum_cols
-        ]
-    ).select(
-        F.lit(int(tasks["file"].nunique())).cast("bigint").alias("files"),
-        *[F.col(c) for c in sum_cols],
+    return _explain_totals(
+        spark, _query_tasks(enc_dir), worker, EXPLAIN_SCHEMA,
+        ["blocks_total", "blocks_pruned", "blocks_full", "blocks_partial",
+         "rows_total", "rows_pruned", "rows_surviving", "payload_bytes"],
     )
 
 
@@ -5781,87 +5799,71 @@ def _make_stats_worker(schema: dict, symbols_hex: tuple[str, ...] | None):
     sidecars — and of each INDEXED int column from its membership keys,
     which gives those columns an exact metadata-only NDV too.  No payload
     column is ever read."""
-    from rlv.util import tune_malloc
-
     int_cols = set(schema["int_cols"])
     str_cols = list(schema["str_cols"])
     idx_cols = [c for c in schema.get("index_cols", ()) if c in int_cols]
 
-    def run_stats(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    symbols = _symbol_list(symbols_hex)
 
+    def phase1(path, file_sid, seg) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
-        )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                meta = pq.read_table(
-                    path,
-                    columns=["col_name", "n_values", "n_nulls", "n_runs",
-                             "min_val", "max_val"],
-                    filters=(
-                        [("split_seq", "=", seg)] if seg is not None
-                        else None
-                    ),
-                ).to_pandas()
-                out: dict[str, list] = {
-                    k: [] for k in ("col_name", "n_rows", "n_nulls",
-                                    "min_int", "max_int", "sval")
-                }
-                for cname, g in meta.groupby("col_name", sort=True):
-                    valid = g[g["n_runs"] > 0]
-                    has_zm = cname in int_cols and len(valid) > 0
-                    out["col_name"].append(cname)
-                    out["n_rows"].append(int(g["n_values"].sum()))
-                    out["n_nulls"].append(int(g["n_nulls"].sum()))
-                    out["min_int"].append(
-                        int(valid["min_val"].min()) if has_zm else None
-                    )
-                    out["max_int"].append(
-                        int(valid["max_val"].max()) if has_zm else None
-                    )
-                    out["sval"].append(None)
-                for c in [*str_cols, *idx_cols]:
-                    vals: set[bytes] = set()
-                    for blob in _read_dict_sidecar(
-                        path, file_sid, col=c, seg=seg
-                    ).values():
-                        vals.update(
-                            B.decode_strings_arrow(blob, symbols).to_pylist()
-                        )
-                    for v in sorted(vals):
-                        out["col_name"].append(c)
-                        out["n_rows"].append(None)
-                        out["n_nulls"].append(None)
-                        out["min_int"].append(None)
-                        out["max_int"].append(None)
-                        # index keys are 8-byte binary (not UTF-8): their
-                        # hex feeds the distinct COUNT only — min_str/
-                        # max_str stay NULL for int columns downstream
-                        out["sval"].append(
-                            v.decode("utf-8") if c in str_cols
-                            else v.hex()
-                        )
-                yield pd.DataFrame(
-                    {
-                        "col_name": pd.Series(out["col_name"], dtype=object),
-                        "n_rows": pd.array(out["n_rows"], dtype="Int64"),
-                        "n_nulls": pd.array(out["n_nulls"], dtype="Int64"),
-                        "min_int": pd.array(out["min_int"], dtype="Int64"),
-                        "max_int": pd.array(out["max_int"], dtype="Int64"),
-                        "sval": pd.Series(out["sval"], dtype=object),
-                    }
+        meta = _read_filtered(
+            path,
+            ["col_name", "n_values", "n_nulls", "n_runs", "min_val",
+             "max_val"],
+            seg=seg,
+        ).to_pandas()
+        out: dict[str, list] = {
+            k: [] for k in ("col_name", "n_rows", "n_nulls",
+                            "min_int", "max_int", "sval")
+        }
+        for cname, g in meta.groupby("col_name", sort=True):
+            valid = g[g["n_runs"] > 0]
+            has_zm = cname in int_cols and len(valid) > 0
+            out["col_name"].append(cname)
+            out["n_rows"].append(int(g["n_values"].sum()))
+            out["n_nulls"].append(int(g["n_nulls"].sum()))
+            out["min_int"].append(
+                int(valid["min_val"].min()) if has_zm else None
+            )
+            out["max_int"].append(
+                int(valid["max_val"].max()) if has_zm else None
+            )
+            out["sval"].append(None)
+        for c in [*str_cols, *idx_cols]:
+            vals: set[bytes] = set()
+            for blob in _read_dict_sidecar(
+                path, file_sid, col=c, seg=seg
+            ).values():
+                vals.update(
+                    B.decode_strings_arrow(blob, symbols).to_pylist()
                 )
+            for v in sorted(vals):
+                out["col_name"].append(c)
+                out["n_rows"].append(None)
+                out["n_nulls"].append(None)
+                out["min_int"].append(None)
+                out["max_int"].append(None)
+                # index keys are 8-byte binary (not UTF-8): their
+                # hex feeds the distinct COUNT only — min_str/
+                # max_str stay NULL for int columns downstream
+                out["sval"].append(
+                    v.decode("utf-8") if c in str_cols
+                    else v.hex()
+                )
+        return pd.DataFrame(
+            {
+                "col_name": pd.Series(out["col_name"], dtype=object),
+                "n_rows": pd.array(out["n_rows"], dtype="Int64"),
+                "n_nulls": pd.array(out["n_nulls"], dtype="Int64"),
+                "min_int": pd.array(out["min_int"], dtype="Int64"),
+                "max_int": pd.array(out["max_int"], dtype="Int64"),
+                "sval": pd.Series(out["sval"], dtype=object),
+            }
+        )
 
-    return run_stats
+    return _TaskOp(_planned_frame, phase1)
 
 
 def stats_table_files(spark: SparkSession, enc_dir: str):
@@ -5897,8 +5899,8 @@ def stats_table_files(spark: SparkSession, enc_dir: str):
     )
     if tasks.empty:
         return spark.createDataFrame([], out_schema)
-    part = _spark_tasks(spark, tasks).mapInPandas(
-        _make_stats_worker(schema, _symbols_hex(enc_dir)),
+    part = _dispatch(
+        spark, tasks, _make_stats_worker(schema, _symbols_hex(enc_dir)),
         STATS_PARTIAL_SCHEMA,
     )
     counts = (
@@ -6036,66 +6038,55 @@ def _make_topk_strs_worker(col: str, k: int, ascending: bool,
     (their matching row count may be zero) — when full blocks yield
     fewer than k distinct values the driver scans unbounded (correctness
     over pruning), mirroring :func:`_topk_survivors`."""
-    from rlv.util import tune_malloc
-
     preds = preds or []
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([col, *pred_cols]))
 
-    def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, *_ = _classify_file(
+            path, file_sid, seg, all_cols, int_preds,
+            mem_preds, or_nodes, symbols,
+        )
+        return {kk for kk, kind in cls.items() if kind == "full"} or None
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+        if plan is None:
+            return pd.DataFrame({"val": pd.Series([], dtype=object)})
+        full_keys = plan
+        side = _read_dict_sidecar(
+            path, file_sid, col=col,
+            block_idx=sorted({bi for _, bi in full_keys}),
+            seg=seg,
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, *_ = _classify_file(
-                    path, file_sid, seg, all_cols, int_preds,
-                    mem_preds, or_nodes, symbols,
-                )
-                full_keys = {kk for kk, kind in cls.items()
-                             if kind == "full"}
-                if not full_keys:
-                    yield pd.DataFrame(
-                        {"val": pd.Series([], dtype=object)})
-                    continue
-                side = _read_dict_sidecar(
-                    path, file_sid, col=col,
-                    block_idx=sorted({bi for _, bi in full_keys}),
-                    seg=seg,
-                )
-                vals: set[bytes] = set()
-                for (sq, _, bi), blob in side.items():
-                    if (sq, int(bi)) not in full_keys:
-                        continue
-                    uniq = B.decode_strings_arrow(blob, symbols)
-                    # each dictionary is SORTED-distinct, so only its k
-                    # extreme entries can reach the task's top-k; the
-                    # periodic re-prune keeps the set O(k), not O(NDV)
-                    ent = uniq.to_pylist()
-                    vals.update(ent[:k] if ascending else ent[-k:])
-                    if len(vals) > 4 * k:
-                        vals = set(
-                            sorted(vals)[:k] if ascending
-                            else sorted(vals)[-k:]
-                        )
-                ext = sorted(vals)[:k] if ascending \
+        vals: set[bytes] = set()
+        for (sq, _, bi), blob in side.items():
+            if (sq, int(bi)) not in full_keys:
+                continue
+            uniq = B.decode_strings_arrow(blob, symbols)
+            # each dictionary is SORTED-distinct, so only its k
+            # extreme entries can reach the task's top-k; the
+            # periodic re-prune keeps the set O(k), not O(NDV)
+            ent = uniq.to_pylist()
+            vals.update(ent[:k] if ascending else ent[-k:])
+            if len(vals) > 4 * k:
+                vals = set(
+                    sorted(vals)[:k] if ascending
                     else sorted(vals)[-k:]
-                yield pd.DataFrame({
-                    "val": pd.Series(
-                        [v.decode("utf-8") for v in ext], dtype=object
-                    )
-                })
+                )
+        ext = sorted(vals)[:k] if ascending \
+            else sorted(vals)[-k:]
+        return pd.DataFrame({
+            "val": pd.Series(
+                [v.decode("utf-8") for v in ext], dtype=object
+            )
+        })
 
-    return run_topk
+    return _TaskOp(finish, phase1)
 
 
 def _topk_table_files_str(
@@ -6120,7 +6111,8 @@ def _topk_table_files_str(
     )
     if tasks.empty:
         return spark.createDataFrame([], empty_schema)
-    cand = _spark_tasks(spark, tasks).mapInPandas(
+    cand = _dispatch(
+        spark, tasks,
         _make_topk_strs_worker(
             col, int(k), ascending, preds=specs,
             symbols_hex=_symbols_hex(enc_dir),
@@ -6176,114 +6168,107 @@ def _make_topk_vals_worker(col: str, k: int, ascending: bool,
     bound comes from FULL-matching blocks' exact counts
     (:func:`_topk_survivors` with ``is_full``); surviving partial blocks
     decode their non-full predicates and mask before contributing."""
-    from rlv.util import tune_malloc
-
     preds = preds or []
     int_preds, mem_preds, or_nodes = _spec_parts(preds)
     pred_cols = _spec_cols(preds)
     all_cols = list(dict.fromkeys([col, *pred_cols]))
 
-    def run_topk(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    symbols = _symbol_list(symbols_hex)
+
+    def phase1(path, file_sid, seg):
+        info, keys, cls, pred_cls, mem_codes, mem_full, \
+            or_data, _, _ = _classify_file(
+                path, file_sid, seg, all_cols, int_preds,
+                mem_preds, or_nodes, symbols,
+            )
+        if not cls:
+            return None
+        # zone-map plan over pred-surviving blocks: full blocks'
+        # exact counts set the bound, the bound prunes everything
+        ordered = sorted(cls)
+        stats = np.array(
+            [info[col][kk] for kk in ordered], np.int64
+        ).reshape(len(ordered), 5)
+        keep = _topk_survivors(
+            stats[:, 0] - stats[:, 1],  # valid values of col
+            stats[:, 2], stats[:, 3], stats[:, 4],
+            k, ascending,
+            is_full=np.array(
+                [cls[kk] == "full" for kk in ordered], bool
+            ),
+        )
+        surv = [kk for kk, kp in zip(ordered, keep) if kp]
+        if not surv:
+            return None
+        # payload fetch: col blocks for survivors; pred blocks only
+        # for surviving partial keys where that pred is not full
+        need: dict[str, set[int]] = {
+            col: {bi for _, bi in surv}
+        }
+        for key in surv:
+            if cls[key] != "partial":
+                continue
+            for c in _pred_need_cols(key, pred_cls, int_preds,
+                                     mem_preds, or_nodes, or_data):
+                need.setdefault(c, set()).add(key[1])
+        return info, cls, pred_cls, mem_codes, mem_full, or_data, surv, need
+
+    def finish(path, file_sid, seg, plan) -> pd.DataFrame:
         from rlv import blocks as B
 
-        tune_malloc()
-        symbols = (
-            [bytes.fromhex(h) for h in symbols_hex]
-            if symbols_hex is not None
-            else None
+        if plan is None:
+            return pd.DataFrame({"val": np.empty(0, np.int64)})
+        info, cls, pred_cls, mem_codes, mem_full, or_data, surv, need = plan
+        blobs = _fetch_payloads(path, file_sid, seg, need)
+        for key in surv:
+            if (key[0], col, key[1]) not in blobs:
+                raise ValueError(
+                    f"column {col!r} is missing block {key[1]} of "
+                    f"segment {key[0]} — corrupt dataset"
+                )
+        parts: list[np.ndarray] = []
+        # FULL survivors (the common no-predicate case) decode as
+        # ONE batch call — per-block dispatch overhead amortizes
+        full_keys = [kk for kk in surv if cls[kk] == "full"]
+        if full_keys:
+            fvals, foffs, fvalid = B.decode_blocks_batch_nullable(
+                [blobs[(sq, col, bi)] for sq, bi in full_keys],
+                np.int64,
+                expected=[info[col][kk][0] for kk in full_keys],
+            )
+            parts.append(fvals[fvalid])
+        for key in surv:
+            if cls[key] != "partial":
+                continue
+            seq, bi = key
+            nv = info[col][key][0]
+            decoded: dict[str, tuple] = {}
+
+            def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
+                if c not in decoded:
+                    decoded[c] = B.decode_blocks_batch_nullable(
+                        [blobs[(seq, c, bi)]], np.int64,
+                        expected=[nv],
+                    )
+                return decoded[c]
+
+            vals, _, valid = _dec(col)
+            mask = _pred_mask(
+                key, nv, pred_cls, int_preds, mem_preds,
+                mem_codes, mem_full, _dec, or_nodes, or_data,
+            )
+            parts.append(vals[mask & valid])
+        vv = np.concatenate(parts) if parts else np.empty(
+            0, np.int64
         )
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                path = row["file"]
-                file_sid = os.path.splitext(os.path.basename(path))[0]
-                seg = _task_seg(row)
-                info, keys, cls, pred_cls, mem_codes, mem_full, \
-                    or_data, _, _ = _classify_file(
-                        path, file_sid, seg, all_cols, int_preds,
-                        mem_preds, or_nodes, symbols,
-                    )
-                if not cls:
-                    yield pd.DataFrame({"val": np.empty(0, np.int64)})
-                    continue
-                # zone-map plan over pred-surviving blocks: full blocks'
-                # exact counts set the bound, the bound prunes everything
-                ordered = sorted(cls)
-                stats = np.array(
-                    [info[col][kk] for kk in ordered], np.int64
-                ).reshape(len(ordered), 5)
-                keep = _topk_survivors(
-                    stats[:, 0] - stats[:, 1],  # valid values of col
-                    stats[:, 2], stats[:, 3], stats[:, 4],
-                    k, ascending,
-                    is_full=np.array(
-                        [cls[kk] == "full" for kk in ordered], bool
-                    ),
-                )
-                surv = [kk for kk, kp in zip(ordered, keep) if kp]
-                if not surv:
-                    yield pd.DataFrame({"val": np.empty(0, np.int64)})
-                    continue
-                # payload fetch: col blocks for survivors; pred blocks only
-                # for surviving partial keys where that pred is not full
-                need: dict[str, set[int]] = {
-                    col: {bi for _, bi in surv}
-                }
-                for key in surv:
-                    if cls[key] != "partial":
-                        continue
-                    for c in _pred_need_cols(key, pred_cls, int_preds,
-                                             mem_preds, or_nodes, or_data):
-                        need.setdefault(c, set()).add(key[1])
-                blobs = _fetch_payloads(path, file_sid, seg, need)
-                for key in surv:
-                    if (key[0], col, key[1]) not in blobs:
-                        raise ValueError(
-                            f"column {col!r} is missing block {key[1]} of "
-                            f"segment {key[0]} — corrupt dataset"
-                        )
-                parts: list[np.ndarray] = []
-                # FULL survivors (the common no-predicate case) decode as
-                # ONE batch call — per-block dispatch overhead amortizes
-                full_keys = [kk for kk in surv if cls[kk] == "full"]
-                if full_keys:
-                    fvals, foffs, fvalid = B.decode_blocks_batch_nullable(
-                        [blobs[(sq, col, bi)] for sq, bi in full_keys],
-                        np.int64,
-                        expected=[info[col][kk][0] for kk in full_keys],
-                    )
-                    parts.append(fvals[fvalid])
-                for key in surv:
-                    if cls[key] != "partial":
-                        continue
-                    seq, bi = key
-                    nv = info[col][key][0]
-                    decoded: dict[str, tuple] = {}
+        if vv.size > k:
+            vv = (
+                np.partition(vv, k - 1)[:k] if ascending
+                else np.partition(vv, vv.size - k)[vv.size - k:]
+            )
+        return pd.DataFrame({"val": vv.astype(np.int64)})
 
-                    def _dec(c, seq=seq, bi=bi, nv=nv, decoded=decoded):
-                        if c not in decoded:
-                            decoded[c] = B.decode_blocks_batch_nullable(
-                                [blobs[(seq, c, bi)]], np.int64,
-                                expected=[nv],
-                            )
-                        return decoded[c]
-
-                    vals, _, valid = _dec(col)
-                    mask = _pred_mask(
-                        key, nv, pred_cls, int_preds, mem_preds,
-                        mem_codes, mem_full, _dec, or_nodes, or_data,
-                    )
-                    parts.append(vals[mask & valid])
-                vv = np.concatenate(parts) if parts else np.empty(
-                    0, np.int64
-                )
-                if vv.size > k:
-                    vv = (
-                        np.partition(vv, k - 1)[:k] if ascending
-                        else np.partition(vv, vv.size - k)[vv.size - k:]
-                    )
-                yield pd.DataFrame({"val": vv.astype(np.int64)})
-
-    return run_topk
+    return _TaskOp(finish, phase1, _plan_bill)
 
 
 def topk_table_files(
@@ -6341,21 +6326,27 @@ def topk_table_files(
     )
     if tasks.empty:
         return spark.createDataFrame([], empty_schema)
-    cand = _spark_tasks(spark, tasks).mapInPandas(
+
+    def kth_extreme(parts):
+        vals = np.sort(np.concatenate(
+            [p["val"].to_numpy(np.int64) for p in parts]
+        ))
+        if not vals.size:
+            return None
+        return int(vals[min(k, vals.size) - 1] if ascending
+                   else vals[-min(k, vals.size)])
+
+    t = _dispatch(
+        spark, tasks,
         _make_topk_vals_worker(
             col, int(k), ascending, preds=specs,
             symbols_hex=_symbols_hex(enc_dir),
         ),
         "val bigint",
+        fold=kth_extreme,
     )
-    rows = (
-        cand.orderBy(F.col("val").asc() if ascending else F.col("val").desc())
-        .limit(k)
-        .collect()
-    )
-    if not rows:
+    if t is None:
         return spark.createDataFrame([], empty_schema)
-    t = int(rows[-1]["val"])
     lo, hi = (-(2**63), t) if ascending else (t, 2**63 - 1)
     # the sort column rides along even when the caller's projection omits
     # it (orderBy needs it resolved), then drops before returning
