@@ -16,7 +16,10 @@ scaling) but moves the data plane entirely into the Python workers:
 * the work/lineage/resume unit is the *split*: deterministic ``split_id`` from
   the row-group list, deterministic output file name, atomic rename on finish;
   retries overwrite with byte-identical content (uniqueness law,
-  rl_encoding.v:1524-1538).
+  rl_encoding.v:1524-1538),
+* every Spark job here and in :mod:`rlv.table_files` launches through
+  :func:`run_packed`: one Spark stage, no shuffle; a retried task redoes
+  its whole bin of units, which the atomic renames make safe.
 
 Measured on this host: ~2x the through-JVM throughput at 32 cores.
 """
@@ -94,24 +97,91 @@ def plan_splits_for_files(files: list[str], num_tasks: int) -> list[dict]:
         pieces.extend(lst)
     pieces.sort(key=lambda p: (-p[2], p[0], p[1]))
     n = min(num_tasks, max(len(pieces), 1))
-    buckets: list[list[tuple[str, int]]] = [[] for _ in range(n)]
-    loads = [0] * n
-    for path, rg, nbytes in pieces:
-        b = loads.index(min(loads))
-        buckets[b].append((path, rg))
-        loads[b] += nbytes
     splits = []
-    for bucket, load in zip(buckets, loads):
-        if not bucket:
-            continue
-        key = json.dumps(sorted(bucket), sort_keys=True).encode()
+    for bin_ in pack_units([p[2] for p in pieces], n):
+        bucket = sorted(pieces[i][:2] for i in bin_)
+        key = json.dumps(bucket, sort_keys=True).encode()
         split_id = hashlib.sha1(key).hexdigest()[:16]
         # "bytes" = planned compressed-byte load (LPT balance evidence; not
         # part of the split identity)
-        splits.append(
-            {"split_id": split_id, "pieces": sorted(bucket), "bytes": load}
-        )
+        splits.append({
+            "split_id": split_id, "pieces": bucket,
+            "bytes": sum(pieces[i][2] for i in bin_),
+        })
     return splits
+
+
+def pack_units(weights, slots: int) -> list[list[int]]:
+    """LPT: unit indices, heaviest first (ties by index), each into the
+    least-loaded of ``slots`` bins (ties by lowest bin).  Returns the
+    non-empty bins in bin order, each in index order."""
+    import heapq
+
+    heap = [(0, b) for b in range(max(slots, 1))]
+    bins: list[list[int]] = [[] for _ in heap]
+    for i in sorted(range(len(weights)), key=lambda i: (-weights[i], i)):
+        load, b = heapq.heappop(heap)
+        bins[b].append(i)
+        heapq.heappush(heap, (load + weights[i], b))
+    return [sorted(b) for b in bins if b]
+
+
+def _symbol_list(symbols_hex: tuple[str, ...] | None):
+    if symbols_hex is None:
+        return None
+    return [bytes.fromhex(h) for h in symbols_hex]
+
+
+def _rgs_by_file(pieces) -> dict[str, list[int]]:
+    """A split's (file, row group) pieces as {file: [row groups]}, in
+    piece order."""
+    by_file: dict[str, list[int]] = {}
+    for path, rg in pieces:
+        by_file.setdefault(path, []).append(rg)
+    return by_file
+
+
+def _launch_slots(spark: SparkSession) -> int:
+    """Task rows one launch may use: the session's cores."""
+    return spark.sparkContext.defaultParallelism
+
+
+def run_packed(
+    spark: SparkSession, units: pd.DataFrame, worker, schema: str, weights
+) -> DataFrame:
+    """Run the ``mapInPandas`` ``worker`` over ``units`` (one row per work
+    unit) as ONE Spark stage with no shuffle: units are LPT-packed by
+    ``weights`` (floored at 1, so up to the core count each unit gets its
+    own bin) into at most ``defaultParallelism`` bins, each a pickled unit
+    frame in one row of a pandas-built ``LocalRelation``, which Spark scans
+    one row per partition.  The worker gets the unit frames back."""
+    import pickle
+
+    bins = pack_units([max(w, 1) for w in weights], _launch_slots(spark))
+    rows = pd.DataFrame({"units": [
+        pickle.dumps(units.iloc[b].reset_index(drop=True)) for b in bins
+    ]})
+
+    def unpacked(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return worker(
+            pickle.loads(u) for pdf in pdf_iter for u in pdf["units"]
+        )
+
+    return spark.createDataFrame(rows, "units binary").mapInPandas(
+        unpacked, schema
+    )
+
+
+def run_splits(spark: SparkSession, splits: list[dict], worker, schema: str
+               ) -> DataFrame:
+    """:func:`run_packed` over planned splits, weighted by their ``bytes``;
+    the worker sees ``split_id`` and JSON ``pieces`` columns."""
+    units = pd.DataFrame({
+        "split_id": [s["split_id"] for s in splits],
+        "pieces": [json.dumps(s["pieces"]) for s in splits],
+    })
+    return run_packed(spark, units, worker, schema,
+                      [s["bytes"] for s in splits])
 
 
 def _resolve_codec_ids(disable_codecs) -> tuple[int, ...]:
@@ -144,11 +214,7 @@ def _make_split_worker(
 
     _encode_arrow_batches = _make_encode_arrow_batches(tuple(disable_codecs))
 
-    symbols = (
-        [bytes.fromhex(h) for h in fsst_symbols_hex]
-        if fsst_symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(fsst_symbols_hex)
 
     def run_split(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
@@ -160,13 +226,10 @@ def _make_split_worker(
         for pdf in pdf_iter:
             for _, row in pdf.iterrows():
                 split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
+                by_file = _rgs_by_file(json.loads(row["pieces"]))
                 t0 = time.perf_counter_ns()
                 out_batches: list[pa.RecordBatch] = []
                 str_parts: dict[str, list] = {c: [] for c in string_cols}
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
                 for path, rgs in by_file.items():
                     pf = pq.ParquetFile(path)
                     tbl = pf.read_row_groups(
@@ -295,7 +358,8 @@ SAMPLE_SCHEMA = (
 def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per-split codec statistics (north rule's sampling pass): run-length
     histogram, value ranges, distinct-value estimate, and a byte sample of the
-    string column for FSST symbol training."""
+    string column for FSST symbol training — one sample per (split, file),
+    on that file's first row (the rest carry none), rows in piece order."""
     import pyarrow.parquet as pq
 
     from rlv.engine import _batch_doc_stats, _list_offsets_values
@@ -305,10 +369,7 @@ def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tune_malloc()
     for pdf in pdf_iter:
         for _, row in pdf.iterrows():
-            pieces = json.loads(row["pieces"])
-            by_file: dict[str, list[int]] = {}
-            for path, rg in pieces:
-                by_file.setdefault(path, []).append(rg)
+            by_file = _rgs_by_file(json.loads(row["pieces"]))
             rows = []
             for path, rgs in by_file.items():
                 tbl = pq.ParquetFile(path).read_row_groups(
@@ -326,7 +387,7 @@ def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 text_sample = b"|".join(
                     s.encode("utf-8") for s in src[:64].tolist()
                 )[:65536]
-                for source in np.unique(src):
+                for j, source in enumerate(np.unique(src)):
                     m = src == source
                     rows.append(
                         {
@@ -341,7 +402,7 @@ def _sample_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             "run_hist": json.dumps(
                                 run_length_histogram(run_len)
                             ),
-                            "sample_text": text_sample,
+                            "sample_text": text_sample if j == 0 else b"",
                         }
                     )
             yield pd.DataFrame(rows)
@@ -358,14 +419,13 @@ def sample_pass(
 
     splits = plan_splits(input_dir, num_tasks)
     sampled = splits[::every_kth] or splits[:1]
-    tasks_pdf = pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in sampled],
-            "pieces": [json.dumps(s["pieces"]) for s in sampled],
-        }
+    rank = {s["split_id"]: i for i, s in enumerate(sampled)}
+    # FSST training is order-sensitive: concatenate the samples in plan
+    # order (a split's rows arrive in piece order), never in task order
+    rows = sorted(
+        run_splits(spark, sampled, _sample_worker, SAMPLE_SCHEMA).collect(),
+        key=lambda r: rank[r["split_id"]],
     )
-    tasks_df = spark.createDataFrame(tasks_pdf).repartition(len(sampled))
-    rows = tasks_df.mapInPandas(_sample_worker, SAMPLE_SCHEMA).collect()
     per_source: dict[str, dict] = {}
     text_sample = bytearray()
     for r in rows:
@@ -441,11 +501,7 @@ def _make_verify_worker(blocks_dir: str, symbols_hex: tuple[str, ...] | None = N
     from rlv.engine import _list_offsets_values
     from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(symbols_hex)
 
     def run_verify(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
@@ -455,10 +511,7 @@ def _make_verify_worker(blocks_dir: str, symbols_hex: tuple[str, ...] | None = N
         for pdf in pdf_iter:
             for _, row in pdf.iterrows():
                 split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
+                by_file = _rgs_by_file(json.loads(row["pieces"]))
                 src = pa.concat_tables(
                     pq.ParquetFile(p).read_row_groups(
                         rgs, columns=["doc_id", "tokens", "source"],
@@ -621,9 +674,8 @@ def verify_files_dataset(
             # missing one — handing it to the worker would concat zero tables
             pieces = json.loads(rec["pieces"]) if rec.get("pieces") else []
             if pieces:
-                todo.append(
-                    {"split_id": str(rec["split_id"]), "pieces": pieces}
-                )
+                todo.append({"split_id": str(rec["split_id"]),
+                             "pieces": pieces, "bytes": rec["bytes_out"]})
             else:
                 no_pieces.append(str(rec["split_id"]))
     if no_pieces:
@@ -644,16 +696,10 @@ def verify_files_dataset(
         todo.extend(planned[sid] for sid in sorted(wanted))
     if not todo:
         return {"splits": 0, "docs": 0, "tokens": 0, "mismatches": 0}
-    tasks_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "split_id": [s["split_id"] for s in todo],
-                "pieces": [json.dumps(s["pieces"]) for s in todo],
-            }
-        )
-    ).repartition(len(todo))
     syms = _load_symbols(out_dir)
-    results = tasks_df.mapInPandas(
+    results = run_splits(
+        spark,
+        todo,
         _make_verify_worker(
             f"{out_dir}/blocks",
             symbols_hex=(
@@ -715,11 +761,7 @@ def _make_decode_worker(out_dir: str, symbols_hex: tuple[str, ...] | None = None
     from rlv import blocks as B
     from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(symbols_hex)
 
     def run_decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
@@ -790,7 +832,8 @@ def decode_files_dataset(
     spark: SparkSession, enc_dir: str, out_dir: str, resume: bool = True
 ) -> dict:
     """Decode every blocks file under ``enc_dir`` back into a token table at
-    ``out_dir`` (one task per blocks file, zero shuffle).  Returns
+    ``out_dir`` (one unit per blocks file, weighted by its size, in one
+    :func:`run_packed` stage).  Returns
     {files, docs, tokens, files_skipped}.
 
     With ``resume``, files whose output already exists are skipped — output
@@ -818,27 +861,23 @@ def decode_files_dataset(
             if f.endswith(".parquet")
         )
     os.makedirs(out_dir, exist_ok=True)
-    skipped = 0
+    n_files = len(files)
     if resume:
-        todo = []
-        for f in files:
-            if os.path.exists(os.path.join(out_dir, os.path.basename(f))):
-                skipped += 1
-            else:
-                todo.append(f)
-        files = todo
+        files = [f for f in files if not os.path.exists(
+            os.path.join(out_dir, os.path.basename(f)))]
+    skipped = n_files - len(files)
     if not files:
         return {"files": 0, "docs": 0, "tokens": 0, "files_skipped": skipped}
     syms = _load_symbols(enc_dir)
-    tasks_df = spark.createDataFrame(
-        pd.DataFrame({"file": files})
-    ).repartition(len(files))
-    rows = tasks_df.mapInPandas(
+    rows = run_packed(
+        spark,
+        pd.DataFrame({"file": files}),
         _make_decode_worker(
             out_dir,
             symbols_hex=tuple(s.hex() for s in syms) if syms is not None else None,
         ),
         DECODE_RESULT_SCHEMA,
+        [os.path.getsize(f) for f in files],
     ).collect()
     return {
         "files": len(rows),
@@ -864,10 +903,7 @@ def _count_runs_worker(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     tune_malloc()
     for pdf in pdf_iter:
         for _, row in pdf.iterrows():
-            pieces = json.loads(row["pieces"])
-            by_file: dict[str, list[int]] = {}
-            for path, rg in pieces:
-                by_file.setdefault(path, []).append(rg)
+            by_file = _rgs_by_file(json.loads(row["pieces"]))
             n_docs = n_tokens = n_runs = 0
             for path, rgs in by_file.items():
                 tbl = pq.ParquetFile(path).read_row_groups(
@@ -907,15 +943,7 @@ def count_runs_files(
     if num_tasks is None:
         num_tasks = 4 * spark.sparkContext.defaultParallelism
     splits = plan_splits(input_dir, num_tasks)
-    tasks_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "split_id": [s["split_id"] for s in splits],
-                "pieces": [json.dumps(s["pieces"]) for s in splits],
-            }
-        )
-    ).repartition(len(splits))
-    rows = tasks_df.mapInPandas(_count_runs_worker, COUNT_SCHEMA).collect()
+    rows = run_splits(spark, splits, _count_runs_worker, COUNT_SCHEMA).collect()
     return {
         "docs": sum(int(r["n_docs"]) for r in rows),
         "tokens": sum(int(r["n_tokens"]) for r in rows),
@@ -1088,9 +1116,10 @@ def compact_blocks(
     spark: SparkSession, out_dir: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Iceberg-style small-file compaction: bin-pack live blocks files up to
-    ``target_bytes`` and rewrite each bin as one file — each bin as ONE SPARK
-    TASK (the data never funnels through the driver; at 100 TB the rewrite
-    bandwidth is the cluster's, not one node's).
+    ``target_bytes`` and rewrite each bin as one file — each bin a unit of
+    a packed Spark task (:func:`run_packed`: one task per bin up to the
+    core count; the data never funnels through the driver; at 100 TB the
+    rewrite bandwidth is the cluster's, not one node's).
 
     Crash-safe protocol, data before metadata: tasks write each merged file
     under an ``.inprogress`` name and rename; only after EVERY bin's data is
@@ -1209,20 +1238,16 @@ def compact_blocks(
                     ),
                 }
             )
-        tasks_df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "new_sid": [s["new_sid"] for s in specs],
-                    "sids": [json.dumps(s["sids"]) for s in specs],
-                    "has_sidecar": [s["has_sidecar"] for s in specs],
-                }
-            )
-        ).repartition(len(specs))
+        units = pd.DataFrame(specs).assign(
+            sids=[json.dumps(s["sids"]) for s in specs]
+        )
         results = {
             str(r["new_sid"]): r
-            for r in tasks_df.mapInPandas(
+            for r in run_packed(
+                spark, units,
                 _make_compact_worker(blocks_dir, strings_dir),
                 COMPACT_RESULT_SCHEMA,
+                [sum(size for _, _, size in bin_) for bin_ in bins],
             ).collect()
         }
         # every bin's data must exist and carry exactly the absorbed rows
@@ -1409,17 +1434,12 @@ def encode_splits(
     todo = [s for s in splits if s["split_id"] not in done]
     if not todo:
         return {"splits_encoded": 0, "splits_skipped": len(done), "tokens": 0}
-    tasks_pdf = pd.DataFrame(
-        {
-            "split_id": [s["split_id"] for s in todo],
-            "pieces": [json.dumps(s["pieces"]) for s in todo],
-        }
-    )
-    # round-robin repartition: exactly one split per Spark task (hash-on-column
-    # would collide splits into the same task and starve workers)
-    tasks_df = spark.createDataFrame(tasks_pdf).repartition(len(todo))
+    # one task per split up to the core count, LPT-packed by planned bytes
+    # above it: one Spark stage, no shuffle
     t0 = time.perf_counter()
-    results = tasks_df.mapInPandas(
+    results = run_splits(
+        spark,
+        todo,
         _make_split_worker(
             blocks_dir,
             string_cols=tuple(string_cols),
@@ -1433,13 +1453,16 @@ def encode_splits(
         RESULT_SCHEMA,
     ).collect()
     wall = time.perf_counter() - t0
+    return _merge_split_manifest(spark, out_dir, results, wall, len(done), todo)
+
+
+def _merge_split_manifest(spark, out_dir, results, wall_sec, skipped, todo
+                          ) -> dict:
+    """Merge the encode results of the ``todo`` splits into the manifest,
+    new rows in ``todo`` (plan) order, whatever order the tasks returned."""
     pieces_of = {s["split_id"]: json.dumps(s["pieces"]) for s in todo}
-    return _merge_split_manifest(spark, out_dir, results, wall, len(done), pieces_of)
-
-
-def _merge_split_manifest(
-    spark, out_dir, results, wall_sec, skipped, pieces_of=None
-) -> dict:
+    rank = {sid: i for i, sid in enumerate(pieces_of)}
+    results = sorted(results, key=lambda r: rank[str(r["split_id"])])
     old_pdf = _read_manifest_pdf(out_dir)
     old: dict[str, dict] = {}
     if old_pdf is not None:
@@ -1474,7 +1497,7 @@ def _merge_split_manifest(
             "finished_at": now,
             # split lineage: the exact (file, row_group) list this split's
             # blocks were encoded from — what the zero-shuffle verify replays
-            "pieces": (pieces_of or {}).get(sid, ""),
+            "pieces": pieces_of[sid],
         }
         summary["tokens"] += int(r["n_tokens"])
         summary["bytes_out"] += int(r["bytes_out"])

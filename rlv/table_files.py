@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from rlv import engine_files
+from rlv.engine_files import _rgs_by_file, _symbol_list
 
 TABLE_RESULT_SCHEMA = (
     "split_id string, n_docs bigint, n_tokens bigint, n_runs bigint, "
@@ -393,11 +394,7 @@ def _make_table_split_worker(
     col_types = col_types or {}
     from rlv.util import tune_malloc
 
-    symbols = (
-        [bytes.fromhex(h) for h in fsst_symbols_hex]
-        if fsst_symbols_hex is not None
-        else None
-    )
+    symbols = _symbol_list(fsst_symbols_hex)
     read_cols = list(dict.fromkeys([order_col, *int_cols, *str_cols]))
 
     def run_split(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -414,11 +411,8 @@ def _make_table_split_worker(
         for pdf in pdf_iter:
             for _, row in pdf.iterrows():
                 split_id = row["split_id"]
-                pieces = json.loads(row["pieces"])
+                by_file = _rgs_by_file(json.loads(row["pieces"]))
                 t0 = time.perf_counter_ns()
-                by_file: dict[str, list[int]] = {}
-                for path, rg in pieces:
-                    by_file.setdefault(path, []).append(rg)
                 tbl = pa.concat_tables(
                     pq.ParquetFile(p).read_row_groups(
                         rgs, columns=read_cols, use_threads=False
@@ -787,16 +781,10 @@ def encode_table_files(
     todo = [s for s in splits if s["split_id"] not in done]
     if not todo:
         return {"splits_encoded": 0, "splits_skipped": len(done), "tokens": 0}
-    tasks_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "split_id": [s["split_id"] for s in todo],
-                "pieces": [json.dumps(s["pieces"]) for s in todo],
-            }
-        )
-    ).repartition(len(todo))
     t0 = time.perf_counter()
-    results = tasks_df.mapInPandas(
+    results = engine_files.run_splits(
+        spark,
+        todo,
         _make_table_split_worker(
             blocks_dir,
             order_col,
@@ -814,9 +802,8 @@ def encode_table_files(
         TABLE_RESULT_SCHEMA,
     ).collect()
     wall = time.perf_counter() - t0
-    pieces_of = {s["split_id"]: json.dumps(s["pieces"]) for s in todo}
     summary = engine_files._merge_split_manifest(
-        spark, out_dir, results, wall, len(done), pieces_of
+        spark, out_dir, results, wall, len(done), todo
     )
     # dict sidecar bytes are tracked OUTSIDE bytes_out (the token plane's
     # sidecar discipline), so bytes_out <= naive_rle_bytes stays structural
@@ -1182,10 +1169,7 @@ def _make_table_verify_worker(blocks_dir: str, schema: dict,
                 seen: set[str] = set()
                 for seq, seg in _split_segments(btbl, split_id):
                     seen.add(seq)
-                    pieces = pmap.get(seq)
-                    by_file: dict[str, list[int]] = {}
-                    for path, rg in pieces or []:
-                        by_file.setdefault(path, []).append(rg)
+                    by_file = _rgs_by_file(pmap.get(seq) or [])
                     src = pa.concat_tables(
                         pq.ParquetFile(p).read_row_groups(
                             rgs, columns=read_cols, use_threads=False
@@ -1237,10 +1221,7 @@ def _make_table_verify_worker(blocks_dir: str, schema: dict,
                 # archived after a passing verify, so an unreadable footer
                 # degrades to counting one mismatch per lost piece
                 for seq in set(pmap) - seen:
-                    lost_by_file: dict[str, list[int]] = {}
-                    for path, rg in pmap[seq]:
-                        lost_by_file.setdefault(path, []).append(rg)
-                    for path, rgs in lost_by_file.items():
+                    for path, rgs in _rgs_by_file(pmap[seq]).items():
                         try:
                             meta = pq.ParquetFile(path).metadata
                             mismatches += sum(
@@ -1520,14 +1501,6 @@ def _file_sid(path: str) -> str:
     return os.path.splitext(os.path.basename(path))[0]
 
 
-def _symbol_list(symbols_hex: tuple[str, ...] | None):
-    return (
-        [bytes.fromhex(h) for h in symbols_hex]
-        if symbols_hex is not None
-        else None
-    )
-
-
 class _TaskOp:
     """One query operator's per-(file, segment) task, split where the
     dispatcher prices it: ``phase1(path, file_sid, seg)`` reads metadata
@@ -1584,9 +1557,11 @@ def _dispatch(spark: SparkSession, tasks: pd.DataFrame, op, schema: str,
     :data:`DRIVER_BILL_VALUES` runs phases 2-3 in the driver too and no
     Python task is dispatched; unfolded partials become a LocalRelation.
     A larger bill ships each task's phase-1 plan in its task row, so
-    workers do not read metadata again.  The task frame is built from
-    pandas either way; with more tasks than cores it is repartitioned to
-    one task per partition, as before."""
+    workers do not read metadata again.  Spark runs the tasks through
+    :func:`rlv.engine_files.run_packed`: one task per partition up to the
+    core count; above it (where the driver runs no phase 1) tasks are
+    LPT-packed into the cores by their share of their blocks file's size
+    (uniform for frames without a ``file`` column)."""
     import pickle
 
     n = len(tasks)
@@ -1603,16 +1578,13 @@ def _dispatch(spark: SparkSession, tasks: pd.DataFrame, op, schema: str,
         else:
             tasks = tasks.assign(phase1=[pickle.dumps(p) for p in plans])
     if parts is None:
-        frame = spark.createDataFrame(
-            tasks,
-            ", ".join(
-                f"`{c}` {'binary' if c == 'phase1' else 'string'}"
-                for c in tasks.columns
-            ),
-        )
-        if n > cores:
-            frame = frame.repartition(n)
-        out = frame.mapInPandas(op, schema)
+        if "file" in tasks:  # a task weighs its share of its file's bytes
+            files = tasks["file"]
+            weights = files.map(os.path.getsize) / files.map(
+                files.value_counts())
+        else:
+            weights = [1] * n
+        out = engine_files.run_packed(spark, tasks, op, schema, weights)
         if fold is None:
             return combine(out) if combine is not None else out
         # object columns keep Python ints (a nullable bigint would
