@@ -37,11 +37,12 @@ Cluster:
     spark-submit ... jobs/query_job.py ctas --data ... --output dst \
         --where '[["prefix","tag","w0"]]' [--cluster-by v]
     spark-submit ... jobs/query_job.py join --data encA --data2 encB \
-        --on k[,k2] [--where ...] [--where2 ...] \
+        --on k[,k2] [--how inner|left] [--where ...] [--where2 ...] \
         [--columns a1,a2] [--columns2 b1] --output dst
-        (general encoded x encoded inner join: both sides through their
-         own pruned scans; broadcast + runtime filter decided from the
-         format's metadata)
+        (general encoded x encoded join, inner by default; --how left
+         keeps every --data row that passes --where: both sides through
+         their own pruned scans; broadcast + runtime filter decided from
+         the format's metadata)
 
 Sandbox: python jobs/query_job.py <action> ... --cpus 32
 """

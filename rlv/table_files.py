@@ -1492,8 +1492,9 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
 # Largest decode bill (values phase 2 decodes, summed over the fetched
 # blocks and columns) the driver runs itself instead of dispatching Python
 # tasks: 512 Ki values is ~60 ms at the measured ~118 ns/value block decode
-# (perfbench's blocks.decode_ns_per_value), against a 0.3-0.7 s floor for
-# dispatching even 4 Python tasks.  A constant of the engine, not a knob.
+# (perfbench's blocks.decode_ns_per_value), against a ~0.2-0.25 s floor
+# for dispatching even 1-4 Python tasks (an identity run_packed job on 4
+# vCPUs).  A constant of the engine, not a knob.
 DRIVER_BILL_VALUES = 512 * 1024
 
 
@@ -3363,7 +3364,7 @@ def ctas_table_files(
         if _dec_alias_parts(src_types.get(c, "int64"))
     } or None
     idx_out = [
-        c for c in int_out if c in schema.get("index_cols", ())
+        c for c in out_names if c in schema.get("index_cols", ())
     ] or None
     if cluster_by is not None:
         # the clustered variant re-sorts anyway, so the scan output is

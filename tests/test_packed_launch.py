@@ -208,3 +208,66 @@ def test_every_files_plane_job_is_one_spark_stage(spark, tok_dir, table_src,
         spark, units, lambda it: it, "u string", [1, 1, 1]
     ).repartition(2).collect())
     assert len(shuffled) >= 2
+
+
+def test_tasks_drop_the_pyspark_zip_finders_and_lazy_imports_still_work(
+        spark):
+    # pyspark submodules the engine never imports, in new subpackages, so
+    # the import must build a finder on the zip that the task dropped
+    candidates = ("pyspark.ml.linalg", "pyspark.mllib.linalg",
+                  "pyspark.streaming.util")
+
+    def probe(pdf_iter):
+        """Report the zip finders at worker entry, then lazily import a
+        fresh pyspark submodule while counting the archive reads it
+        makes."""
+        import importlib
+        import sys
+        import zipimport
+
+        archive = getattr(sys.modules["pyspark"].__loader__, "archive", None)
+
+        def zip_finders() -> int:
+            return sum(archive is not None and getattr(f, "archive", None)
+                       == archive for f in sys.path_importer_cache.values())
+
+        at_entry = zip_finders()
+        fresh = next((m for m in candidates if m not in sys.modules), "")
+        reads: list[str] = []
+        read_directory = zipimport._read_directory
+
+        def counted(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counted
+        try:
+            imported = bool(fresh) and importlib.import_module(
+                fresh) is not None
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in pdf_iter:
+            yield pd.DataFrame({
+                "archive": [archive or ""], "at_entry": [at_entry],
+                "fresh": [fresh], "imported": [imported],
+                "archive_reads": [reads.count(archive)],
+                "after_import": [zip_finders()],
+            })
+
+    units = pd.DataFrame({"u": ["a"]})
+    engine_files.run_packed(spark, units, lambda it: it, "u string",
+                            [1]).collect()
+    [r] = engine_files.run_packed(
+        spark, units, probe,
+        "archive string, at_entry bigint, fresh string, imported boolean, "
+        "archive_reads bigint, after_import bigint", [1]).collect()
+    if not r["archive"]:
+        pytest.skip("the workers import pyspark from a directory, so there "
+                    "is no zip finder to drop")
+    assert r["at_entry"] == 0
+    assert r["fresh"], "every probe module was already loaded"
+    assert r["imported"]
+    # the import rebuilt finders on the zip from the directory cache, with
+    # no re-read of the archive: which is why every task drops them again
+    assert r["after_import"] > 0
+    assert r["archive_reads"] == 0

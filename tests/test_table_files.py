@@ -4462,6 +4462,52 @@ def test_string_index_cols_point_lookup_parity(spark, tmp_path):
         )
 
 
+def test_ctas_keeps_string_index_cols(spark, tmp_path):
+    """CTAS re-declares every projected index column, string ones too:
+    the destination's table schema records them."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    n = 4000
+    pq.write_table(
+        pa.table({
+            "k": pa.array(range(n), pa.int64()),
+            "fk": pa.array([i % 97 for i in range(n)], pa.int64()),
+            "sk_n": pa.array([None if i % 13 == 0 else f"key{i % 50:03d}"
+                              for i in range(n)], pa.string()),
+        }),
+        f"{d}/p.parquet", row_group_size=1000,
+    )
+    src = str(tmp_path / "enc")
+    table_files.encode_table_files(
+        spark, [f"{d}/p.parquet"], src, order_col="k",
+        int_cols=["k", "fk"], str_cols=["sk_n"], rows_per_block=256,
+        num_tasks=2, index_cols=["fk", "sk_n"],
+    )
+    dst = str(tmp_path / "ctas")
+    table_files.ctas_table_files(
+        spark, src, dst, [("between", "k", 100, 2999)],
+        columns=["k", "fk", "sk_n"], rows_per_block=256,
+    )
+    assert table_files._load_table_schema(dst)["index_cols"] == \
+        ["fk", "sk_n"]
+    # a projection that drops an index column drops its declaration
+    dst2 = str(tmp_path / "ctas2")
+    table_files.ctas_table_files(
+        spark, src, dst2, [("between", "k", 100, 2999)],
+        columns=["k", "sk_n"], rows_per_block=256,
+    )
+    assert table_files._load_table_schema(dst2)["index_cols"] == ["sk_n"]
+    got = table_files.scan_table_files_where(
+        spark, dst, [("eq", "sk_n", "key007")], columns=["k"]).collect()
+    assert sorted(r["k"] for r in got) == [
+        i for i in range(100, 3000) if i % 50 == 7 and i % 13 != 0]
+
+
 def test_random_clause_sweep_matches_sql(spark, tmp_path):
     """Seeded adversarial sweep over the WHOLE predicate algebra: 40
     random one-alternation clauses (every leaf kind incl. negations,
