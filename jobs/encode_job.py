@@ -10,6 +10,17 @@ Sandbox (local[N] stands in for N executors):
         --output /tmp/enc --cpus 32 --verify
 
 Build the zip for --py-files with:  python -m zipfile -c rlv.zip rlv
+
+Without --cpus the session comes from the submit command, not from
+rlv.session.make_session.  Its Python tasks still drop the import finders
+on Spark's own archives (engine_files.run_packed), but they connect to the
+executors over loopback TCP, which costs every Python task a ~40 ms wait
+for its first input batch, unless the command passes
+    --conf spark.python.unix.domain.socket.enabled=true
+and, when java.io.tmpdir is longer than 64 bytes (Linux caps a socket path
+at 107 bytes, and Spark's socket names add 43 to the directory),
+    --conf spark.python.unix.domain.socket.dir=<a directory of at most
+        61 characters, the longest Spark accepts there>
 Two data planes (same blocks byte-for-byte):
   * ``files``  — python-native scan (rlv.engine_files): no shuffle, pyarrow IO;
   * ``jvm``    — DataFrame pipeline (rlv.engine): group hashing, LPT

@@ -146,6 +146,15 @@ def _launch_slots(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism
 
 
+def spark_python_archives(spark: SparkSession) -> frozenset[str]:
+    """The archives of Spark's own Python path, as the driver's JVM lists
+    them for the workers' ``PYTHONPATH`` (``PythonUtils.sparkPythonPath``):
+    pyspark.zip, the py4j zip and the spark-core jar."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.spark.api.python.PythonUtils.sparkPythonPath()
+    return frozenset(p for p in path.split(os.pathsep) if p)
+
+
 def run_packed(
     spark: SparkSession, units: pd.DataFrame, worker, schema: str, weights
 ) -> DataFrame:
@@ -156,21 +165,24 @@ def run_packed(
     frame in one row of a pandas-built ``LocalRelation``, which Spark scans
     one row per partition.  The worker gets the unit frames back.
 
-    Before the worker runs, every task drops the import finders on Spark's
-    own zip archives (:func:`rlv.util.drop_spark_zip_finders`), so the next
-    task's ``invalidate_caches()`` does not re-read pyspark.zip (about
-    0.1 s of every Python task on 4 vCPUs)."""
+    Before the worker runs, every task drops the import finders on every
+    archive of Spark's own Python path (:func:`spark_python_archives`:
+    pyspark.zip, the py4j zip and the spark-core jar; see
+    :func:`rlv.util.drop_spark_zip_finders`), so the next task's
+    ``invalidate_caches()`` does not re-read them (over 0.1 s of every
+    Python task on 4 vCPUs)."""
     import pickle
 
     from rlv.util import drop_spark_zip_finders
 
+    archives = spark_python_archives(spark)
     bins = pack_units([max(w, 1) for w in weights], _launch_slots(spark))
     rows = pd.DataFrame({"units": [
         pickle.dumps(units.iloc[b].reset_index(drop=True)) for b in bins
     ]})
 
     def unpacked(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_spark_zip_finders()
+        drop_spark_zip_finders(archives)
         return worker(
             pickle.loads(u) for pdf in pdf_iter for u in pdf["units"]
         )

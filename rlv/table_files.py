@@ -1492,7 +1492,7 @@ def _query_tasks(enc_dir: str) -> pd.DataFrame:
 # Largest decode bill (values phase 2 decodes, summed over the fetched
 # blocks and columns) the driver runs itself instead of dispatching Python
 # tasks: 512 Ki values is ~60 ms at the measured ~118 ns/value block decode
-# (perfbench's blocks.decode_ns_per_value), against a ~0.2-0.25 s floor
+# (perfbench's blocks.decode_ns_per_value), against a ~0.11-0.13 s floor
 # for dispatching even 1-4 Python tasks (an identity run_packed job on 4
 # vCPUs).  A constant of the engine, not a knob.
 DRIVER_BILL_VALUES = 512 * 1024

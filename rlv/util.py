@@ -36,31 +36,26 @@ def tune_malloc() -> None:
     _tuned = True
 
 
-def drop_spark_zip_finders() -> None:
-    """Drop the cached import finders on Spark's own zip archives.
+def drop_spark_zip_finders(archives: frozenset[str]) -> None:
+    """Drop the cached import finders on Spark's own archives.
 
-    A Spark Python worker imports pyspark and py4j from
-    ``$SPARK_HOME/python/lib/*.zip``, and PySpark's task set-up calls
-    ``importlib.invalidate_caches()`` at the start of every task.  On Python
-    >= 3.10 that makes every cached ``zipimporter`` re-read its archive's
-    central directory: 12 finders on pyspark.zip (1,328 entries) cost about
-    0.1 s of every task on 4 vCPUs, before any rlv code runs.  Dropping
-    those finders from ``sys.path_importer_cache`` changes no import
-    result: a later import rebuilds the finder from
-    ``zipimport._zip_directory_cache`` without reading the archive again.  Only the archives ``pyspark`` and
-    ``py4j`` were loaded from are touched (found from their loaders, so an
-    ``addPyFile`` archive keeps PySpark's reload), and nothing happens when
-    they were imported from a directory.  Call it on every task, not once
-    per process: a first-time lazy import can rebuild a finder.
+    ``archives`` is Spark's Python path as the driver reads it
+    (:func:`rlv.engine_files.spark_python_archives`): pyspark.zip, the py4j
+    zip and the spark-core jar, all on the workers' ``PYTHONPATH``.
+    PySpark's task set-up calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on Python >= 3.10 that makes every cached
+    ``zipimporter`` re-read its archive's central directory: 12 finders on
+    pyspark.zip (1,328 entries), 2 on the py4j zip and 2 on the spark-core
+    jar (5,359 entries, no Python module), over 0.1 s of every task on 4
+    vCPUs before any rlv code runs.  Dropping those finders from
+    ``sys.path_importer_cache`` changes no import result: a later import
+    rebuilds the finder from ``zipimport._zip_directory_cache`` without
+    reading the archive again.  A user's ``addPyFile`` archive sits under
+    SparkFiles' root directory, which Spark's Python path never lists, so
+    it keeps PySpark's reload.  Call it on every task, not once per
+    process: a first-time lazy import can rebuild a finder.
     """
-    zips = {
-        getattr(getattr(sys.modules.get(m), "__loader__", None), "archive",
-                None)
-        for m in ("pyspark", "py4j")
-    } - {None}
-    if not zips:
-        return
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
-        if getattr(finder, "archive", None) in zips:
+        if getattr(finder, "archive", None) in archives:
             del cache[path]

@@ -13,6 +13,8 @@ settings.load_profile("rlv")
 def spark():
     from pyspark.sql import SparkSession
 
+    from rlv.session import python_socket_confs
+
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("rlv-tests")
@@ -23,6 +25,8 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
+        # the engine's Python-worker transport (rlv.session.make_session)
+        .config(map=python_socket_confs())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

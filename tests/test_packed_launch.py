@@ -1,6 +1,7 @@
 """The packed task launcher (``engine_files.run_packed``): LPT bins, byte
-identity across packings, plan-ordered manifests and samples, and one Spark
-stage per job."""
+identity across packings, plan-ordered manifests and samples, one Spark
+stage per job, the per-task drop of the import finders on Spark's own
+archives, and the Unix-socket transport ``make_session`` sets up."""
 
 from __future__ import annotations
 
@@ -8,6 +9,12 @@ import glob
 import hashlib
 import json
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import textwrap
+import zipfile
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -211,27 +218,29 @@ def test_every_files_plane_job_is_one_spark_stage(spark, tok_dir, table_src,
 
 
 def test_tasks_drop_the_pyspark_zip_finders_and_lazy_imports_still_work(
-        spark):
+        spark, tmp_path):
+    # Spark's own Python path: pyspark.zip, the py4j zip, the spark-core jar
+    archives = engine_files.spark_python_archives(spark)
     # pyspark submodules the engine never imports, in new subpackages, so
     # the import must build a finder on the zip that the task dropped
     candidates = ("pyspark.ml.linalg", "pyspark.mllib.linalg",
                   "pyspark.streaming.util")
 
     def probe(pdf_iter):
-        """Report the zip finders at worker entry, then lazily import a
-        fresh pyspark submodule while counting the archive reads it
-        makes."""
+        """Report the finders on Spark's archives at worker entry, then
+        lazily import a fresh pyspark submodule while counting the archive
+        reads it makes."""
         import importlib
         import sys
         import zipimport
 
         archive = getattr(sys.modules["pyspark"].__loader__, "archive", None)
 
-        def zip_finders() -> int:
-            return sum(archive is not None and getattr(f, "archive", None)
-                       == archive for f in sys.path_importer_cache.values())
+        def finders(paths) -> int:
+            return sum(getattr(f, "archive", None) in paths
+                       for f in sys.path_importer_cache.values())
 
-        at_entry = zip_finders()
+        at_entry = finders(archives)
         fresh = next((m for m in candidates if m not in sys.modules), "")
         reads: list[str] = []
         read_directory = zipimport._read_directory
@@ -250,8 +259,8 @@ def test_tasks_drop_the_pyspark_zip_finders_and_lazy_imports_still_work(
             yield pd.DataFrame({
                 "archive": [archive or ""], "at_entry": [at_entry],
                 "fresh": [fresh], "imported": [imported],
-                "archive_reads": [reads.count(archive)],
-                "after_import": [zip_finders()],
+                "archive_reads": [sum(p in archives for p in reads)],
+                "after_import": [finders({archive})],
             })
 
     units = pd.DataFrame({"u": ["a"]})
@@ -264,6 +273,7 @@ def test_tasks_drop_the_pyspark_zip_finders_and_lazy_imports_still_work(
     if not r["archive"]:
         pytest.skip("the workers import pyspark from a directory, so there "
                     "is no zip finder to drop")
+    assert r["archive"] in archives
     assert r["at_entry"] == 0
     assert r["fresh"], "every probe module was already loaded"
     assert r["imported"]
@@ -271,3 +281,96 @@ def test_tasks_drop_the_pyspark_zip_finders_and_lazy_imports_still_work(
     # no re-read of the archive: which is why every task drops them again
     assert r["after_import"] > 0
     assert r["archive_reads"] == 0
+
+    # negative control: a user's addPyFile archive keeps its finder
+    user_zip = tmp_path / "rlv_user_archive.zip"
+    with zipfile.ZipFile(user_zip, "w") as z:
+        z.writestr("rlv_user_module.py", "VALUE = 7\n")
+    spark.sparkContext.addPyFile(str(user_zip))
+
+    def user_probe(pdf_iter):
+        """Report whether this worker has a finder on the user archive at
+        entry, then import the module the archive ships."""
+        import sys
+
+        at_entry = any(
+            os.path.basename(getattr(f, "archive", None) or "")
+            == user_zip.name for f in sys.path_importer_cache.values())
+        import rlv_user_module
+
+        for _ in pdf_iter:
+            yield pd.DataFrame({"pid": [os.getpid()], "at_entry": [at_entry],
+                                "value": [rlv_user_module.VALUE]})
+
+    seen, repeats = set(), []
+    for _ in range(6):
+        [u] = engine_files.run_packed(
+            spark, units, user_probe,
+            "pid bigint, at_entry boolean, value bigint", [1]).collect()
+        assert u["value"] == 7
+        if u["pid"] in seen:
+            repeats.append(u["at_entry"])
+        seen.add(u["pid"])
+    assert repeats, "no worker process ran two of the tasks"
+    assert all(repeats)
+
+
+# temp directory lengths: one whose socket directory would pass Linux's
+# 107-byte socket path cap but not Spark's 61-character directory cap, and
+# one too long for both
+@pytest.mark.parametrize("tmp_len", [45, 101], ids=["dir_cap", "path_cap"])
+def test_make_session_runs_python_workers_over_short_unix_sockets(tmp_len):
+    """A session whose temp directory is too long for a Unix socket
+    directory still runs its Python workers and driver sockets over Unix
+    sockets, in a directory removed when the driver exits.  A child
+    process, since a process holds one SparkContext."""
+    base = tempfile.mkdtemp(prefix="rlv-", dir="/tmp")
+    long_tmp = os.path.join(base, "t" * (tmp_len - len(base) - 1))
+    assert len(long_tmp) == tmp_len
+    try:
+        _run_socket_child(long_tmp)
+    finally:
+        shutil.rmtree(base)
+
+
+def _run_socket_child(long_tmp: str) -> None:
+    os.mkdir(long_tmp)
+    child = textwrap.dedent("""
+        import glob, json, os
+        import pandas as pd
+        from rlv import engine_files
+        from rlv.session import make_session
+
+        spark = make_session(2, driver_mem="1g")
+        conf = spark.sparkContext.getConf()
+        sock_dir = conf.get("spark.python.unix.domain.socket.dir", "")
+        packed = engine_files.run_packed(
+            spark, pd.DataFrame({"u": [1, 2, 3]}), lambda it: it, "u long",
+            [1, 1, 1]).collect()
+        local = spark.createDataFrame(pd.DataFrame({"v": [4, 5]})).collect()
+        print(json.dumps({
+            "uds": conf.get("spark.python.unix.domain.socket.enabled"),
+            "jvm_tmpdir": spark.sparkContext._jvm.java.lang.System
+                .getProperty("java.io.tmpdir"),
+            "dir": sock_dir,
+            "socks": glob.glob(os.path.join(sock_dir, ".*.sock")),
+            "packed": sorted(r.u for r in packed),
+            "local": sorted(r.v for r in local),
+        }))
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=long_tmp, PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        f'--driver-java-options "-Djava.io.tmpdir={long_tmp}" pyspark-shell')
+    done = subprocess.run([sys.executable, "-c", child], env=env, cwd=root,
+                          capture_output=True, text=True, timeout=600)
+    assert done.returncode == 0, done.stderr[-3000:]
+    out = json.loads(done.stdout.strip().splitlines()[-1])
+    assert out["jvm_tmpdir"] == long_tmp
+    assert out["uds"] == "true"
+    assert out["socks"], "no Unix socket in the socket directory"
+    assert all(len(os.fsencode(p)) <= 107 for p in out["socks"])
+    assert out["packed"] == [1, 2, 3]
+    assert out["local"] == [4, 5]
+    assert not os.path.exists(out["dir"])
